@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one parquet-scan entry point
+(:func:`read_parquet`) with the session's width ratchet and schema cache.
 
 Defaults are sized for the local[32] test box but every knob is
 environment-overridable so the same code runs on a real cluster:
@@ -9,9 +10,16 @@ AQE, Arrow) from here.
 
 from __future__ import annotations
 
+import copy
+import hashlib
 import os
+import stat
+import threading
+import weakref
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
@@ -124,47 +132,59 @@ def derived_width(input_bytes: int) -> int:
     return min(WIDEN_CAP, int(input_bytes) // WIDEN_BYTES_PER_PARTITION)
 
 
-def local_input_bytes(path: str) -> int:
-    """Total on-disk bytes of a local file or directory tree; 0 when
-    unreadable or not a local path (the ratchet then stays silent)."""
+def input_files(path: str) -> tuple[int, tuple[tuple[str, int, int], ...]]:
+    """One walk of a local scan input: ``(total bytes, identity)``.
+
+    The identity is the sorted ``(relative name, size, st_mtime_ns)`` of
+    every file under ``path`` (``""`` names a single-file input). Any
+    append, rewrite, deletion or versioned swap below ``path`` changes
+    it, which is what lets :func:`read_parquet` reuse an inferred
+    schema. ``(0, ())`` when unreadable or not a local path (the ratchet
+    then stays silent and the scan infers as usual)."""
     try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
+        st = os.stat(path)
     except OSError:
-        return 0
+        return 0, ()
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_size, (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            try:
+                st = os.stat(full)
+            except OSError:
+                continue  # removed mid-walk
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    files.sort()
+    return sum(f[1] for f in files), tuple(files)
 
 
-def maybe_widen_partitions(spark: SparkSession, path: str) -> int:
+def maybe_widen_partitions(spark: SparkSession, input_bytes: int) -> int:
     """Scale-adaptive shuffle-width RATCHET (r12, VERDICT r11 #6 —
     guide §2.2 "derive the width from input size, not a constant").
 
-    Called by the table-scan entry points (sources/tables.load_table,
-    sinks/warehouse.Warehouse.read): when the scanned input is large
-    enough that downstream shuffles would leave every reducer with GBs
-    of state at the session's per-core default width, raise AQE's
+    Called by :func:`read_parquet` — the table-scan entry point of
+    sources/tables.load_table and sinks/warehouse.Warehouse.read — with
+    the scanned input's on-disk bytes: when the input is large enough
+    that downstream shuffles would leave every reducer with GBs of state
+    at the session's per-core default width, raise AQE's
     ``initialPartitionNum`` so shuffles START wide and coalescing
     shrinks the small ones back (start-wide-coalesce-back, the r11
     session knob — now self-sizing). Only ever RAISES the width, never
     lowers it, and defers entirely when the operator-level
     ``SPARK_GRAFT_INITIAL_PARTITIONS`` env var pins an explicit width.
 
-    Under the bench this is a guaranteed no-op: the largest sf0.1 table
-    is ~11 MB → 21 partitions, below the 32-core floor — the graded
-    layout is unchanged by construction (the driver also benches at 8
-    cores; the floor tracks defaultParallelism, not a constant).
+    It fires whenever the derived width exceeds the session's floor —
+    the largest of ``defaultParallelism``, ``spark.sql.shuffle.partitions``
+    and any width already set — so it is NOT a no-op under the benches:
+    sf0.1 ``lineitem`` (~11 MB) derives 20, which widens a 4- or 8-core
+    session and leaves a 32-core one alone.
     Returns the width set, or 0 when nothing changed.
     """
     if os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS"):
         return 0  # explicit sizing wins
-    width = derived_width(local_input_bytes(path))
+    width = derived_width(input_bytes)
     if width <= 0:
         return 0
 
@@ -186,3 +206,86 @@ def maybe_widen_partitions(spark: SparkSession, path: str) -> int:
         return 0
     spark.conf.set(_WIDEN_CONF, str(width))
     return width
+
+
+#: Inferred scan schemas kept per session (LRU): far above the distinct
+#: (table, version) inputs one session scans between rewrites, while an
+#: entry is a schema plus a fixed-size key.
+SCHEMA_CACHE_SIZE = 256
+
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+class _SchemaCache:
+    """Bounded LRU of inferred parquet schemas for one session."""
+
+    def __init__(self, size: int = SCHEMA_CACHE_SIZE):
+        self.size = size
+        self._lock = threading.Lock()  # py4j callback threads scan too
+        self._entries: OrderedDict[tuple, T.StructType] = OrderedDict()
+
+    def get(self, key: tuple) -> T.StructType | None:
+        with self._lock:
+            schema = self._entries.get(key)
+            if schema is not None:
+                self._entries.move_to_end(key)
+            return schema
+
+    def put(self, key: tuple, schema: T.StructType) -> None:
+        with self._lock:
+            self._entries[key] = schema
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.size:
+                self._entries.popitem(last=False)
+
+
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_cache(spark: SparkSession) -> _SchemaCache:
+    """The session's cache, created on first use and dropped with it."""
+    with _SCHEMAS_LOCK:
+        cache = _SCHEMAS.get(spark)
+        if cache is None:
+            cache = _SCHEMAS[spark] = _SchemaCache()
+        return cache
+
+
+def read_parquet(
+    spark: SparkSession, path: str, *, merge_schema: bool = False
+) -> DataFrame:
+    """The one parquet-scan entry point (load_table, Warehouse.read).
+
+    One walk of ``path`` (:func:`input_files`) feeds both the width
+    ratchet (:func:`maybe_widen_partitions`) and a per-session schema
+    cache. Inferring a schema reads footers in a Spark job (~0.1 s per
+    scan on 4 cores); a cache hit passes the schema to the reader and
+    starts no job. The key is (path, file identity, ``merge_schema``,
+    the session's ``nanosAsLong`` value), so an append, a rewrite with
+    other columns or a versioned CURRENT swap changes the key and is
+    re-inferred exactly as an uncached read would be. A failed
+    inference stores nothing, so a table with no data files still
+    raises UNABLE_TO_INFER_SCHEMA on every read; an empty identity
+    (nothing there, or not a local path) bypasses the cache.
+    """
+    input_bytes, identity = input_files(path)
+    maybe_widen_partitions(spark, input_bytes)
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    if not identity:
+        return reader.parquet(path)
+    # the identity as a digest: a table of many files would otherwise
+    # keep its whole listing alive in every entry
+    digest = hashlib.sha256(repr(identity).encode()).digest()
+    key = (path, digest, merge_schema, spark.conf.get(_NANOS_CONF, None))
+    cache = _schema_cache(spark)
+    schema = cache.get(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(path)
+    df = reader.parquet(path)
+    # a copy: the frame's own schema goes to the caller, and
+    # StructType.add mutates in place
+    cache.put(key, copy.deepcopy(df.schema))
+    return df

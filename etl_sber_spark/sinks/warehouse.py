@@ -28,6 +28,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import read_parquet
+
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
@@ -123,33 +125,26 @@ class Warehouse:
         still fails the merge; that is a rewrite
         (:meth:`overwrite_versioned`), not an append.
         """
-        opts = {"mergeSchema": "true"} if merge_schema else {}
         d = self._dir(name)
         cur = os.path.join(d, "CURRENT")
         if version is not None:
-            vdir = os.path.join(d, f"v_{version}")
-            if not os.path.isdir(vdir):
+            path = os.path.join(d, f"v_{version}")
+            if not os.path.isdir(path):
                 raise ValueError(
                     f"{name} has no retained version {version}; "
                     f"available: {self.versions(name)}"
                 )
-            return self._scan(vdir, opts)
-        if os.path.exists(cur):
+        elif os.path.exists(cur):
             with open(cur) as f:
-                current = f.read().strip()
-            return self._scan(os.path.join(d, current), opts)
-        return self._scan(d, opts)
-
-    def _scan(self, path: str, opts: dict) -> DataFrame:
-        """One parquet scan + the scale-adaptive AQE width ratchet
-        (session.maybe_widen_partitions): a warehouse table big enough
-        that downstream shuffles would swamp the per-core default width
-        raises initialPartitionNum for the session — how the composed
-        1000× curate spine sizes itself with no env var (r12)."""
-        from ..session import maybe_widen_partitions
-
-        maybe_widen_partitions(self.spark, path)
-        return self.spark.read.options(**opts).parquet(path)
+                path = os.path.join(d, f.read().strip())
+        else:
+            path = d
+        # session.read_parquet: the width ratchet (a table big enough to
+        # swamp the per-core shuffle width raises initialPartitionNum —
+        # how the composed 1000× curate spine sizes itself) and the
+        # per-session schema cache, keyed on the files below ``path`` so
+        # an append or a CURRENT swap is re-inferred
+        return read_parquet(self.spark, path, merge_schema=merge_schema)
 
     def versions(self, name: str) -> list[int]:
         """Retained version numbers of a versioned table, ascending

@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import read_parquet
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -46,20 +48,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Both conversions are codegen'd projections: no UDF, no driver
     round-trip, so they cost nothing at 100 TB scan scale.
+
+    The scan goes through ``session.read_parquet``: the first scan of a
+    table in a session infers its schema from the parquet footers (one
+    Spark job); later scans of the unchanged files take the schema from
+    the session's cache and start no job. The inferred schema depends on
+    the ``nanosAsLong`` flag set above, which is part of the cache key.
+    That call also applies the session's shuffle-width ratchet.
     """
     _FLAG = "spark.sql.legacy.parquet.nanosAsLong"
     if spark.conf.get(_FLAG, None) != "true":
         spark.conf.set(_FLAG, "true")
-    path = f"{sf_dir}/{name}.parquet"
-    # scale-adaptive AQE width (session.maybe_widen_partitions): raises
-    # initialPartitionNum when THIS scan is large enough that the
-    # session's per-core shuffle default would leave reducers with GBs
-    # of state; a provable no-op at every bench SF (largest sf0.1 table
-    # ~11 MB → below the core-count floor)
-    from ..session import maybe_widen_partitions
-
-    maybe_widen_partitions(spark, path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # integer division: epoch-nanos overflow double's mantissa, so
         # `/ 1000` would round the microseconds up
@@ -89,9 +89,11 @@ def register_views(
     pre-registered views) so plans can be written in Spark SQL too.
 
     ``names`` restricts registration to the tables a query actually
-    reads: each registration is a parquet-footer schema inference
-    (~60 ms), so registering all 10 per query call charged ~0.6 s of
-    pure catalog setup to any SQL-shaped plan (r5 bench finding)."""
+    reads. Footer inference runs only on a table's first scan in a
+    session (later scans reuse the cached schema), but every
+    registration still lists the table's files, analyzes its scan and
+    replaces a catalog entry, so tables a query never reads are not
+    registered."""
     dfs = {n: load_table(spark, sf_dir, n) for n in names}
     for n, df in dfs.items():
         df.createOrReplaceTempView(n)
