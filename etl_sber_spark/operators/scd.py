@@ -7,74 +7,31 @@ UPDATE, so ``scd2_apply`` is a read-modify-rewrite: one pass that
 classifies every history row and every staged row, producing the complete
 next history (the sink swaps it in atomically — sinks/warehouse.py).
 
-Scale design: the diff is three hash-joins on the dimension key; the
-rewrite is a projection + union — no window over the whole history, no
-driver round-trips. Dimensions are small by definition (broadcast-able),
-but nothing here breaks if they aren't: every join is an equi-join on the
-key, so it degrades to a partitioned shuffle join.
+Scale design: the diff and the rewrite are one plan with one shuffle.
+History and snapshot rows are unioned and hashed once on the dimension
+key; one window over each key sees the key's current versions and staged
+rows together, and every input row expands into its output rows (itself,
+closed or not, plus a tombstone or a new version) with no join and no
+driver round-trip. A key's window holds its versions and its staged
+rows, so memory per task is bounded by the busiest key, not the table.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.normalize import max_ts_lit
 
 
-def _neq_any(left: str, right: str, attrs: list[str]) -> Column:
-    """Null-unsafe attribute-change disjunction (main.py:120-122).
-
-    Deliberately ``!=`` not ``<=>``: NULL attribute transitions are NOT
-    detected as changes, faithfully reproducing the reference's 3-valued
-    logic (SURVEY.md §2.4 F5).
-    """
-    cond = F.lit(False)
-    for a in attrs:
-        cond = cond | (F.col(f"{left}.{a}") != F.col(f"{right}.{a}"))
-    return cond
-
-
-@dataclass
-class SnapshotDiff:
-    new: DataFrame
-    changed: DataFrame
-    deleted: DataFrame
-
-
-def snapshot_diff(
-    stg: DataFrame, current: DataFrame, key: str, attrs: list[str]
-) -> SnapshotDiff:
-    """Full CDC diff of a snapshot vs the current dimension state (S1).
-
-    - new     = stg rows whose key is absent from current (anti, J1 —
-      main.py:74-85);
-    - deleted = current rows whose key is absent from stg (anti, J2 —
-      main.py:92-103);
-    - changed = stg rows whose key exists with any differing attribute
-      (inner + neq residual, J4 — main.py:110-124).
-
-    Both inputs are read up to three times; callers that materialize
-    them once (``.cache()``) avoid re-scanning — pipeline.py does.
-    """
-    cols = [key, *attrs]
-    stg = stg.select(*cols).alias("stg")
-    cur = current.select(*cols).alias("cur")
-    new = stg.join(cur, on=key, how="left_anti")
-    deleted = cur.join(stg, on=key, how="left_anti")
-    changed = (
-        stg.join(
-            cur,
-            (F.col(f"stg.{key}") == F.col(f"cur.{key}"))
-            & _neq_any("stg", "cur", attrs),
-            "inner",
-        )
-        .select([F.col(f"stg.{c}").alias(c) for c in cols])
+def _is_current(ts: Column) -> Column:
+    """Open at ``ts`` and not deleted (main.py:56-67)."""
+    return ts.between(F.col("effective_from"), F.col("effective_to")) & (
+        F.col("deleted_flg") == 0
     )
-    return SnapshotDiff(new=new, changed=changed, deleted=deleted)
 
 
 def scd2_current(
@@ -87,10 +44,7 @@ def scd2_current(
         if isinstance(processing_ts, dt.datetime)
         else processing_ts
     )
-    return hist.filter(
-        ts.between(F.col("effective_from"), F.col("effective_to"))
-        & (F.col("deleted_flg") == 0)
-    )
+    return hist.filter(_is_current(ts))
 
 
 def scd2_apply(
@@ -102,20 +56,43 @@ def scd2_apply(
 ) -> DataFrame:
     """Apply one snapshot to an SCD2 history; returns the NEXT history.
 
-    Reproduces main.py:129-188 without UPDATE:
+    Reproduces main.py:72-188 without UPDATE. Per key, against the
+    CURRENT versions (open at ``processing_ts``, not deleted):
 
-    1. close-out: open versions (effective_to = the 2999 sentinel) whose
-       key is in (changed ∪ deleted) get effective_to = processing_ts - 1s
-       (the reference's ``sysdate - 1/24/60/60``, main.py:131-142);
+    - new: a staged row whose key has no current version (main.py:74-85);
+    - changed: a staged row whose key has a current version with any
+      differing attribute — once per such version (main.py:110-124).
+      Deliberately ``!=``, not ``<=>``: a NULL on either side is not a
+      change, the reference's 3-valued logic (SURVEY.md §2.4 F5);
+    - deleted: a current version whose key is not staged (main.py:92-103).
+
+    Then:
+
+    1. close-out: open versions (effective_to = the 2999 sentinel) of the
+       changed, deleted and reborn keys (below) get effective_to =
+       processing_ts - 1s (the reference's ``sysdate - 1/24/60/60``,
+       main.py:131-142);
     2. append new rows and new versions of changed rows with defaults
        (deleted_flg=0, effective_from=processing_ts, effective_to=max —
        main.py:143-170 + DDL defaults main.py:48-50);
     3. append open tombstones for deleted keys (deleted_flg=1,
        main.py:171-186).
 
+    Keys compare with SQL ``=``, so a NULL key matches nothing: a staged
+    NULL-key row is always new, and a current NULL-key version always
+    gets a tombstone and is never closed. Duplicate staged rows of a new
+    key are each appended. Replaying an identical snapshot at a later ts
+    is a no-op; a changed snapshot replayed at the ts that opened the
+    versions it closes writes inverted intervals (pipeline.load_terminals
+    refuses that write).
+
     The result is a full replacement of the history table — the caller
     writes it via an atomic swap (the table can't be overwritten while
     being read, SURVEY.md §4.3.1).
+
+    Plan: one union of history and staged rows, one hash Exchange on
+    ``key``, one window per key, one generator — no join, so nothing
+    else to shuffle or broadcast.
 
     Canonical deviation (found by the property suite, documented per
     SURVEY.md §7.4): when a previously-deleted key REAPPEARS in a
@@ -128,50 +105,88 @@ def scd2_apply(
     cols = [key, *attrs]
     ts = F.lit(processing_ts).cast("timestamp")
     closed_ts = F.lit(processing_ts - dt.timedelta(seconds=1)).cast("timestamp")
+    max_ts = max_ts_lit()
 
-    current = scd2_current(hist, processing_ts)
-    diff = snapshot_diff(stg, current, key, attrs)
-    # keys whose open version must be closed: changed, deleted, and
-    # reborn (new key that still has an open tombstone). Tiny sets —
-    # broadcast.
-    open_tombstones = hist.filter(
-        (F.col("effective_to") == max_ts_lit()) & (F.col("deleted_flg") == 1)
-    ).select(key)
-    reborn = diff.new.select(key).join(open_tombstones, on=key, how="left_semi")
-    to_close = (
-        diff.changed.select(key)
-        .unionByName(diff.deleted.select(key))
-        .unionByName(reborn)
-        .distinct()
-    )
-
-    is_open = F.col("effective_to") == max_ts_lit()
-    closing = hist.join(F.broadcast(to_close), on=key, how="left_semi").filter(
-        is_open
-    )
-    # complement of `closing` without exceptAll (which would shuffle the
-    # whole history on every column): anti-join-on-key ∪ already-closed
-    untouched = hist.join(F.broadcast(to_close), on=key, how="left_anti").unionByName(
-        hist.join(F.broadcast(to_close), on=key, how="left_semi").filter(~is_open)
-    )
-    closed = closing.withColumn("effective_to", closed_ts)
-
-    def _versions(df: DataFrame, flg: int) -> DataFrame:
-        return df.select(
+    rows = hist.select(
+        *cols,
+        "deleted_flg",
+        "effective_from",
+        "effective_to",
+        F.lit(False).alias("_staged"),
+    ).unionByName(
+        stg.select(
             *cols,
-            F.lit(flg).cast("int").alias("deleted_flg"),
-            ts.alias("effective_from"),
-            max_ts_lit().alias("effective_to"),
+            F.lit(None).cast("int").alias("deleted_flg"),
+            F.lit(None).cast("timestamp").alias("effective_from"),
+            F.lit(None).cast("timestamp").alias("effective_to"),
+            F.lit(True).alias("_staged"),
+        )
+    )
+    flg_type = rows.schema["deleted_flg"].dataType
+    staged = F.col("_staged")
+    keyed = F.col(key).isNotNull()
+    is_open = F.col("effective_to") == max_ts
+    is_current = F.coalesce(~staged & _is_current(ts), F.lit(False))
+
+    def differs(s, c) -> Column:
+        # some attribute differs under SQL `!=` (a NULL side is no change)
+        return F.coalesce(
+            reduce(lambda x, y: x | y, [s[a] != c[a] for a in attrs]),
+            F.lit(False),
         )
 
-    appended = (
-        _versions(diff.new, 0)
-        .unionByName(_versions(diff.changed, 0))
-        .unionByName(_versions(diff.deleted, 1))
+    # one window per key: the key's current versions, its staged rows,
+    # and whether it has an open tombstone (rows of a NULL key share a
+    # window but match nothing, so their window values go unused)
+    w = Window.partitionBy(key)
+    attr_struct = F.struct(*attrs)
+    rows = rows.select(
+        "*",
+        F.collect_list(F.when(is_current, attr_struct)).over(w).alias("_cur"),
+        F.collect_list(F.when(staged, attr_struct)).over(w).alias("_stg"),
+        F.bool_or(~staged & is_open & (F.col("deleted_flg") == 1))
+        .over(w)
+        .alias("_tomb"),
     )
-    return untouched.select(hist.columns).unionByName(
-        closed.select(hist.columns)
-    ).unionByName(appended.select(hist.columns))
+    n_cur = F.size("_cur")
+    n_stg = F.size("_stg")
+    # the key's open versions close when it changed, was deleted, or is
+    # reborn (new, with an open tombstone)
+    rows = rows.withColumn(
+        "_close",
+        keyed
+        & (
+            F.exists("_stg", lambda s: F.exists("_cur", lambda c: differs(s, c)))
+            | ((n_stg == 0) & (n_cur > 0))
+            | ((n_cur == 0) & (n_stg > 0) & F.coalesce(F.col("_tomb"), F.lit(False)))
+        ),
+    )
+    to_close = F.col("_close")
+
+    def version(flg: int) -> Column:
+        return F.struct(
+            *cols,
+            F.lit(flg).cast(flg_type).alias("deleted_flg"),
+            ts.alias("effective_from"),
+            max_ts.alias("effective_to"),
+        )
+
+    kept = F.struct(
+        *cols,
+        "deleted_flg",
+        "effective_from",
+        F.when(to_close & is_open, closed_ts)
+        .otherwise(F.col("effective_to"))
+        .alias("effective_to"),
+    )
+    tombstone = F.when(is_current & (~keyed | (n_stg == 0)), version(1))
+    copies = F.when(~keyed | (n_cur == 0), 1).otherwise(
+        F.size(F.filter("_cur", lambda c: differs(attr_struct, c)))
+    )
+    out = F.when(staged, F.array_repeat(version(0), copies)).otherwise(
+        F.filter(F.array(kept, tombstone), lambda v: v.isNotNull())
+    )
+    return rows.select(F.inline(out)).select(hist.columns)
 
 
 def scd1_append(

@@ -44,7 +44,7 @@ T_MART = "rep_fraud"
 
 
 def _empty(spark: SparkSession, schema) -> DataFrame:
-    return spark.createDataFrame([], schema)
+    return src.frame_from_rows(spark, [], schema)
 
 
 def load_terminals(
@@ -58,28 +58,31 @@ def load_terminals(
     ts with ts−1s — a permanently corrupt history row that the
     full-history mart joins would then multiply (r8 review). Equal-day
     corrections are fine at any LATER processing_ts; only the
-    same-instant changed-content replay is refused. The check is one
-    dim-sized filter before the atomic swap — nothing is written on
-    refusal."""
+    same-instant changed-content replay is refused. The inverted rows
+    are counted on the write job itself and checked before the CURRENT
+    flip (``Warehouse.overwrite_versioned(refuse=...)``): on refusal the
+    unpublished version is deleted and the served history is unchanged.
+    The apply, the count and the write are one Spark plan."""
     hist = (
         wh.read(T_HIST)
         if wh.has_data(T_HIST)
         else _empty(wh.spark, schemas.TERMINALS_HIST)
     )
     nxt = scd2_apply(hist, stg, "terminal_id", TERMINAL_ATTRS, processing_ts)
-    nxt = nxt.localCheckpoint(eager=False)  # checked, then written
-    n_inverted = nxt.filter(
-        F.col("effective_to") < F.col("effective_from")
-    ).count()
-    if n_inverted:
-        raise ValueError(
-            f"terminals load at {processing_ts} would write {n_inverted} "
-            "inverted SCD2 interval(s) (effective_to < effective_from) — "
-            "this is a changed-content snapshot replayed at its original "
-            "processing_ts; rerun the correction with a later "
-            "processing_ts"
-        )
-    wh.overwrite_versioned(nxt, T_HIST)
+    wh.overwrite_versioned(
+        nxt,
+        T_HIST,
+        refuse=(
+            F.col("effective_to") < F.col("effective_from"),
+            lambda n: (
+                f"terminals load at {processing_ts} would write {n} "
+                "inverted SCD2 interval(s) (effective_to < effective_from) — "
+                "this is a changed-content snapshot replayed at its original "
+                "processing_ts; rerun the correction with a later "
+                "processing_ts"
+            ),
+        ),
+    )
 
 
 def load_blacklist(wh: Warehouse, stg: DataFrame) -> None:

@@ -696,7 +696,7 @@ def q_window_running(spark, sf_dir):
 def q_scd2_snapshot(spark, sf_dir):
     """S1+S2 flattened: open an SCD2 history from snapshot A (lineitem
     linenumber=1 keyed by order), apply snapshot B (linenumber=2) via the
-    engine's snapshot_diff + scd2_apply (operators/scd.py), and emit the
+    engine's scd2_apply (operators/scd.py), and emit the
     complete next history. The oracle recomputes the same close-out /
     new-version / tombstone algebra in pure SQL — a true differential
     test of the composite operator the reference runs nightly
@@ -718,15 +718,12 @@ def q_scd2_snapshot(spark, sf_dir):
     def snap(linenumber: int) -> DataFrame:
         # the synthetic lineitem repeats linenumbers per order, so a
         # snapshot needs explicit key-uniqueness: min-aggregate per key.
-        # Pinned: the SCD2 apply reads each snapshot 3× (diff legs +
-        # history complement) — unmaterialized that is 6 lineitem
-        # scans/aggregations instead of 2. (A fused single-scan variant
-        # with conditional min-aggs was measured SLOWER — 2.5s vs 1.95s
-        # at sf0.1: two pushdown-filtered scans with simple aggs beat
-        # one scan aggregating twice the rows with when()-guarded aggs.)
-        from ..operators.materialize import pin
-
-        return pin(
+        # The SCD2 apply reads each snapshot once, so nothing is pinned.
+        # (A fused single-scan variant with conditional min-aggs was
+        # measured SLOWER — 2.5s vs 1.95s at sf0.1: two pushdown-filtered
+        # scans with simple aggs beat one scan aggregating twice the rows
+        # with when()-guarded aggs.)
+        return (
             li.filter(F.col("l_linenumber") == linenumber)
             .groupBy(F.col("l_orderkey").alias("order_key"))
             .agg(

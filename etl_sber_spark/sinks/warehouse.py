@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import read_parquet
 
@@ -274,8 +276,6 @@ class Warehouse:
         files dominates scan setup — nightly compaction of closed
         partitions is standard warehouse hygiene. Returns the partition
         row count (sanity signal for the caller)."""
-        from pyspark.sql import functions as F
-
         part = self.read(name).filter(F.col(partition_col) == partition_value)
         n = part.count()
         (
@@ -369,6 +369,7 @@ class Warehouse:
         *,
         partition_by: list[str] | None = None,
         metadata: dict | None = None,
+        refuse: tuple[Column, Callable[[int], str]] | None = None,
     ) -> None:
         """Write the next version directory, then atomically flip CURRENT.
 
@@ -394,7 +395,17 @@ class Warehouse:
         publish in the same atomic pointer swap; a separate sidecar
         table would let a reader observe new data with the old
         watermark (review finding, r6 ADVICE). Read it back with
-        :meth:`read_metadata`."""
+        :meth:`read_metadata`.
+
+        ``refuse=(predicate, message)`` is a guard checked before the
+        flip: the write counts the rows matching ``predicate`` as a
+        ``DataFrame.observe`` metric of the write job itself (no extra
+        job). A non-zero count deletes the unpublished ``v_{n+1}`` and
+        raises ``ValueError(message(count))``; CURRENT, the retained
+        versions and their metadata are left exactly as they were, so
+        nothing is served. A crash between the write and the check
+        leaves the same orphan ``v_{n+1}`` a crash before the flip
+        always could — never read, replaced by the next write."""
         import json
 
         d = self._dir(name)
@@ -406,10 +417,19 @@ class Warehouse:
                 prev = f.read().strip()
         n = int(prev.split("_")[1]) + 1 if prev else 1
         version = f"v_{n}"
+        if refuse is not None:
+            predicate, message = refuse
+            guard = Observation()
+            df = df.observe(guard, F.count(F.when(predicate, 1)).alias("n"))
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(os.path.join(d, version))
+        if refuse is not None:
+            n_refused = guard.get["n"]
+            if n_refused:
+                shutil.rmtree(os.path.join(d, version), ignore_errors=True)
+                raise ValueError(message(n_refused))
         if metadata is not None:
             with open(os.path.join(d, version, "_meta.json"), "w") as f:
                 json.dump(metadata, f)

@@ -10,7 +10,10 @@ pandas reindex, main.py:214).
 
 Scale design: the transactions CSV is read by Spark executors (splittable,
 schema'd, no inference pass); xlsx dims are parsed driver-side (hundreds
-of rows — see sources/xlsx.py) and parallelized via createDataFrame.
+of rows — see sources/xlsx.py) and handed to Spark as an Arrow table
+(:func:`frame_from_rows`), which plans as a local relation with real size
+statistics, so joins against a snapshot broadcast it instead of
+shuffling.
 """
 
 from __future__ import annotations
@@ -20,7 +23,9 @@ import fnmatch
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -134,13 +139,36 @@ def read_transactions_csv_quarantine(
     return good, bad
 
 
+def frame_from_rows(
+    spark: SparkSession, rows: list[list], schema: T.StructType
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (lists in ``schema`` order),
+    built through a ``pyarrow.Table`` typed with ``schema``.
+
+    ``createDataFrame(list)`` plans as an RDD scan whose size estimate
+    is Long.MaxValue, so every join against the frame shuffles both
+    sides. The Arrow table becomes a local relation with its real size,
+    which the planner broadcasts. Inputs above Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) are
+    switched back to an RDD by Spark itself. A value that does not fit
+    its field's type raises ``TypeError`` (pyarrow's ``ArrowTypeError``)
+    from the conversion."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _cell_str(v):
     """Stringify an xlsx cell for a StringType column. Excel types any
     digit-only cell as NUMERIC (a blacklist passport number, a numeric
-    terminal id), which the sheet reader surfaces as int/float —
-    createDataFrame against a StringType field would raise TypeError on
-    it and crash the whole load. Integral floats render without the
-    spurious '.0'."""
+    terminal id), which the sheet reader surfaces as int/float — the
+    Arrow conversion in :func:`frame_from_rows` would raise TypeError on
+    it for a string field and crash the whole load. Integral floats
+    render without the spurious '.0'."""
     if v is None:
         return None
     if isinstance(v, float) and v.is_integer():
@@ -149,14 +177,17 @@ def _cell_str(v):
 
 
 def read_terminals_xlsx(spark: SparkSession, path: str) -> DataFrame:
-    """Terminal snapshot xlsx → typed staging DataFrame (main.py:18-19)."""
+    """Terminal snapshot xlsx → typed staging DataFrame (main.py:18-19).
+
+    Parsed on the driver and handed to Spark as an Arrow table
+    (:func:`frame_from_rows`): a snapshot plans with its real size, so
+    a join against it broadcasts it instead of shuffling."""
     header, rows = read_table(path)
     expected = [f.name for f in schemas.TERMINALS.fields]
     # map by header name (files ship the canonical order, but don't rely on it)
     idx = [header.index(c) for c in expected]
     data = [[_cell_str(r[i]) for i in idx] for r in rows]
-    df = spark.createDataFrame(data, schemas.TERMINALS)
-    return trim_all_strings(df)
+    return trim_all_strings(frame_from_rows(spark, data, schemas.TERMINALS))
 
 
 def read_blacklist_xlsx(spark: SparkSession, path: str) -> DataFrame:
@@ -167,12 +198,16 @@ def read_blacklist_xlsx(spark: SparkSession, path: str) -> DataFrame:
     ``df.reindex(columns=['passport','date'])`` and stringifies the date
     for ``to_date(?, 'YYYY-MM-DD')`` (main.py:212-223). Styled-blank rows
     (quirk 4) are dropped by the sheet reader; serials → dates (quirk 5).
+    Like the terminals snapshot, the rows reach Spark as an Arrow table
+    (:func:`frame_from_rows`), so ``scd1_append``'s joins against it
+    broadcast it.
     """
     header, rows = read_table(path, date_cols=("date",))
     pi, di = header.index("passport"), header.index("date")
     data = [[_cell_str(r[pi]), r[di]] for r in rows]
-    df = spark.createDataFrame(data, schemas.PASSPORT_BLACKLIST)
-    return trim_all_strings(df)
+    return trim_all_strings(
+        frame_from_rows(spark, data, schemas.PASSPORT_BLACKLIST)
+    )
 
 
 # ---------------------------------------------------------------------------

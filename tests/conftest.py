@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import time
+import uuid
+
 import pytest
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -45,3 +48,27 @@ def parquet_col_ranges(path_glob: str, col: str, per: str = "file"):
         if per == "file" and lo is not None:
             out.append((lo, hi))
     return out
+
+
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``. A sentinel job in a
+    second group runs after ``fn``; the status store applies listener
+    events in order, so once the sentinel is visible every job ``fn``
+    started is counted too. Shared by the job-count pins
+    (test_schema_cache, test_terminals_load)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    gid = f"jobs-started-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count probe")
+    try:
+        out = fn()
+        sc.setJobGroup(gid + "-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(gid + "-sentinel"):
+            assert time.monotonic() < deadline, "sentinel job never recorded"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(tracker.getJobIdsForGroup(gid))

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import sys
 import threading
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -20,36 +18,15 @@ from etl_sber_spark.session import _SchemaCache, input_files, read_parquet
 from etl_sber_spark.sinks.warehouse import Warehouse
 from etl_sber_spark.sources.tables import load_table
 
-
-def _jobs_started(spark, fn):
-    """``(fn(), number of Spark jobs fn started)``. A sentinel job in a
-    second group runs after ``fn``; the status store applies listener
-    events in order, so once the sentinel is visible every job ``fn``
-    started is counted too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    gid = f"schema-cache-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, "schema cache probe")
-    try:
-        out = fn()
-        sc.setJobGroup(gid + "-sentinel", "sentinel")
-        sc.parallelize([0], 1).count()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup(gid + "-sentinel"):
-            assert time.monotonic() < deadline, "sentinel job never recorded"
-            time.sleep(0.05)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(tracker.getJobIdsForGroup(gid))
+from .conftest import jobs_started
 
 
 def test_unchanged_path_second_scan_starts_no_job(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(20).selectExpr("id", "id * 2 AS v").write.parquet(path)
 
-    first, jobs1 = _jobs_started(spark, lambda: read_parquet(spark, path))
-    second, jobs2 = _jobs_started(spark, lambda: read_parquet(spark, path))
+    first, jobs1 = jobs_started(spark, lambda: read_parquet(spark, path))
+    second, jobs2 = jobs_started(spark, lambda: read_parquet(spark, path))
     assert jobs1 >= 1  # footer inference: the probe sees jobs
     assert jobs2 == 0
     assert second.schema == first.schema
@@ -99,7 +76,7 @@ def test_merge_schema_read_after_widened_append(spark, tmp_path):
     wh.append(spark.createDataFrame([(2, "new")], "k int, extra string"), "t")
     wh.read("t")  # one footer's schema, cached under merge_schema=False
     for want_jobs in (True, False):  # miss, then hit
-        merged, jobs = _jobs_started(spark, lambda: wh.read("t", merge_schema=True))
+        merged, jobs = jobs_started(spark, lambda: wh.read("t", merge_schema=True))
         assert (jobs >= 1) is want_jobs
         assert "extra" in merged.columns
         assert sorted(tuple(r) for r in merged.select("k", "extra").collect()) == [
@@ -132,8 +109,8 @@ def test_nanosecond_events_same_cached_as_uncached(spark, tmp_path):
         version="2.6",
     )
     sf = str(tmp_path)
-    uncached, jobs1 = _jobs_started(spark, lambda: load_table(spark, sf, "events"))
-    cached, jobs2 = _jobs_started(spark, lambda: load_table(spark, sf, "events"))
+    uncached, jobs1 = jobs_started(spark, lambda: load_table(spark, sf, "events"))
+    cached, jobs2 = jobs_started(spark, lambda: load_table(spark, sf, "events"))
     assert (jobs1 >= 1, jobs2) == (True, 0)
     assert cached.schema == uncached.schema
     assert cached.schema["ts"].dataType.typeName() == "timestamp"

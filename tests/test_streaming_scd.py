@@ -76,10 +76,10 @@ def _batch_history(spark, stamps):
         stg = spark.createDataFrame(
             [(*r, ts) for r in DAYS[ts]], SNAP_SCHEMA
         ).drop("snapshot_ts")
-        # cut lineage per round: scd2_apply references hist ~6 times, so
-        # chaining without materialization builds a 6^n-copy plan tree
-        # (the pipeline always writes between applies, so only a test
-        # that chains in memory ever sees this)
+        # cut lineage per round: chaining applies in memory stacks one
+        # shuffle and one window per round onto the plan (the pipeline
+        # always writes between applies, so only a test that chains in
+        # memory ever sees this)
         hist = scd2_apply(hist, stg, KEY, ATTRS, ts).localCheckpoint()
     return hist
 
