@@ -93,22 +93,10 @@ def train_ivf_index(
     ``train_mod=m`` trains on the deterministic ~1/m hash sample, the
     100 TB default (centroid quality follows the sample distribution,
     not its identity). Returns the (tiny) centroid frame to persist
-    via :func:`save_ivf_index`.
-
-    Per-iteration assignment runs on the ``"auto"`` engine (Arrow when
-    available — r11): at build scale (√n lists over the train sample)
-    the vectorized kernel trains 4-8× faster than the interpreted fold
-    with an IDENTICAL trajectory (kmeans_centroids docstring; pinned in
-    tests/test_arrow_assign.py). The graded inline q_ivf_topk trainer
-    is a different call and keeps the expr default."""
+    via :func:`save_ivf_index`. The Lloyd iterations assign with the
+    same SQL fold as the graded inline q_ivf_topk trainer."""
     return kmeans_centroids(
-        embeddings,
-        n_lists,
-        n_iter,
-        id_col,
-        vec_col,
-        train_mod=train_mod,
-        assign_impl="auto",
+        embeddings, n_lists, n_iter, id_col, vec_col, train_mod=train_mod
     )
 
 
@@ -148,7 +136,6 @@ def materialize_ivf_assignments(
     vec_col: str = "embedding",
     *,
     cent_rows=None,
-    impl: str = "auto",
 ) -> DataFrame:
     """The ingest-time step: every input column plus ``centroid_id``
     (nearest centroid in the quantized training space — the same
@@ -165,18 +152,15 @@ def materialize_ivf_assignments(
     contract makes the hoist sound: the artifact cannot change
     mid-stream.
 
-    ``impl`` (r10): the assignment engine — ``"arrow"`` (vectorized
-    numpy over Arrow batches, bit-equal to the SQL fold and ~16× faster
-    at k=64 — the ingest bottleneck tools/profile_vector_ingest.py
-    attributed), ``"expr"`` (the interpreted fold), or ``"auto"``
-    (arrow when available — the default). Stored centroid_id columns
-    are identical whichever engine wrote them
-    (tests/test_arrow_assign.py)."""
+    The assignment is the SQL fold of
+    :func:`similarity.nearest_centroids_expr` — the interpreted
+    argmin tools/profile_vector_ingest.py attributes most of the
+    vector-ingest wall to (SCALE.md)."""
     if cent_rows is None:
         cent_rows = _centroid_rows(centroids)
     return spread(embeddings).withColumn(
         "centroid_id",
-        nearest_centroids_col(vec_col, cent_rows, 1, impl).getItem(0),
+        nearest_centroids_col(vec_col, cent_rows, 1).getItem(0),
     )
 
 
@@ -309,7 +293,6 @@ def materialize_lsh_buckets(
     n_dims: int,
     vec_col: str = "embedding",
     n_tables: int = 1,
-    impl: str = "auto",
 ) -> DataFrame:
     """Ingest-time LSH bucketing: every input column plus ``bucket``
     (the N_PLANES-bit table-0 hyperplane signature — a pure projection).
@@ -325,25 +308,11 @@ def materialize_lsh_buckets(
     plane math (the per-table candidate explode is a projection over
     these stored ints).
 
-    ``impl`` (r10) picks the projection engine per column —
-    ``"arrow"`` (similarity.bucket_arrow, bit-equal, vectorized) /
-    ``"expr"`` / ``"auto"`` (arrow when available): the ingest twin of
-    the argmin's engine knob; query-side inline bucketing
-    (cosine_topk_lsh, the graded path) stays on the expression."""
-    from .similarity import arrow_assign_available, bucket_arrow
-
-    if impl == "auto":
-        impl = "arrow" if arrow_assign_available() else "expr"
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl={impl!r}: expected 'auto', 'arrow' or 'expr'")
+    Each column is :func:`similarity.bucket_expr`, the same projection
+    the query side (cosine_topk_lsh, the graded path) computes inline."""
     out = spread(embeddings)
     for t, col in enumerate(lsh_table_columns(n_tables)):
-        out = out.withColumn(
-            col,
-            bucket_arrow(F.col(vec_col), n_dims, t)
-            if impl == "arrow"
-            else bucket_expr(vec_col, n_dims, t),
-        )
+        out = out.withColumn(col, bucket_expr(vec_col, n_dims, t))
     return out
 
 
@@ -715,10 +684,6 @@ def _recall_probe(
             k=recall_k,
             id_col=id_col,
             vec_col=vec_col,
-            # queries × sample pair scoring was the probe's dominant
-            # term on the interpreted fold; the arrow engine is
-            # bit-equal (tests/test_arrow_assign.py) — r10
-            sim_impl="auto",
         ).collect()
 
     def _approx_rows():
@@ -731,10 +696,6 @@ def _recall_probe(
             vec_col=vec_col,
             centroids=cents,
             centroid_col=centroid_col,
-            # the probe runs sample × √n-sized k — the vectorized
-            # assignment engine (bit-equal) keeps build/status wall
-            # sample-bounded as k grows (r10)
-            assign_impl="auto",
         ).collect()
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -777,12 +738,11 @@ def _ladder_recalls(
       the prefix of rungs that divide its hash);
     - each rung's queries are ``row_number() over (partition by rung
       order by id) <= q`` ≡ the per-rung ``orderBy(id).limit(q)``;
-    - pair sims are PER-ROW deterministic (the arrow kernel and the
-      rounded SQL fold score each (query, candidate) pair identically
-      whatever batch or rung it arrives in), and each side's engine
-      mirrors :func:`_recall_probe`'s choice: arrow-when-available for
-      the brute-force side, the rounded expression for IVF scoring
-      with the arrow assignment engine for list ids;
+    - pair sims are PER-ROW deterministic (the rounded SQL fold scores
+      each (query, candidate) pair identically whatever rung it
+      arrives in), and both sides use :func:`_recall_probe`'s
+      expressions: the rounded cosine for scoring and the SQL argmin
+      for list ids;
     - top-k is the same (sim DESC, id) window, partitioned by
       (rung, query) instead of query — each rung's partitions hold
       exactly the rows the per-rung window held, in the same order.
@@ -791,14 +751,7 @@ def _ladder_recalls(
     per-rung probe's empty-sample answer."""
     from ..functions.hashing import hash64
     from ..functions.vectors import cosine_similarity
-    from .similarity import (
-        SIM_SCALE,
-        arrow_assign_available,
-        cosine_sim_round_arrow,
-        nearest_centroids_col,
-        nearest_centroids_expr,
-        quantize_vec_sql,
-    )
+    from .similarity import SIM_SCALE
 
     cent_rows = _centroid_rows(cents)
     h = hash64(F.col(id_col).cast("string"))
@@ -823,15 +776,9 @@ def _ladder_recalls(
             "_pcid",
         )
     )
-    if arrow_assign_available():
-        sim_exact = cosine_sim_round_arrow(
-            F.col("q_vec"), F.col(f"e.{vec_col}")
-        )
-    else:
-        sim_exact = F.round(
-            cosine_similarity(F.col("q_vec"), F.col(f"e.{vec_col}")),
-            SIM_SCALE,
-        )
+    sim = F.round(
+        cosine_similarity(F.col("q_vec"), F.col(f"e.{vec_col}")), SIM_SCALE
+    )
     w = Window.partitionBy("_rung", "query_id").orderBy(
         F.col("sim").desc(), F.col(id_col)
     )
@@ -846,20 +793,14 @@ def _ladder_recalls(
             F.col("e._rung").alias("_rung"),
             "query_id",
             F.col(f"e.{id_col}").alias(id_col),
-            sim_exact.alias("sim"),
+            sim.alias("sim"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= recall_k)
         .select("_rung", "query_id", id_col)
     )
     cand = member.withColumn(
-        "_cid",
-        nearest_centroids_col(
-            vec_col,
-            cent_rows,
-            1,
-            "arrow" if arrow_assign_available() else "expr",
-        ).getItem(0),
+        "_cid", nearest_centroids_col(vec_col, cent_rows, 1).getItem(0)
     )
     qp = queries.withColumn("_cid", F.explode("_pcid")).drop("_pcid")
     iv_top = (
@@ -874,10 +815,7 @@ def _ladder_recalls(
             F.col("e._rung").alias("_rung"),
             "query_id",
             F.col(f"e.{id_col}").alias(id_col),
-            F.round(
-                cosine_similarity(F.col("q_vec"), F.col(f"e.{vec_col}")),
-                SIM_SCALE,
-            ).alias("sim"),
+            sim.alias("sim"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= recall_k)

@@ -50,7 +50,6 @@ from .similarity import (
     _centroid_rows,
     kmeans_centroids,
     nearest_centroids_col,
-    quantize_vec_sql,
 )
 from .spread import spread
 
@@ -90,7 +89,6 @@ def semantic_assignments(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """(id, vec, centroid_id, centroid_sim): nearest centroid per vector
     plus the cosine similarity to it — one shuffle-free projection.
@@ -99,15 +97,12 @@ def semantic_assignments(
     literal directly: cosine is scale-invariant, so the × QUANT factor
     the trainer bakes into centroid coordinates cancels. Rounded to
     SIM_SCALE like every similarity this package emits.
-
-    ``impl`` picks the argmin engine (similarity.nearest_centroids_col
-    — the r10 Arrow fast path by default, bit-equal to the SQL fold).
     """
     cent_rows = _centroid_rows(centroids)
     return spread(embeddings).select(
         F.col(id_col),
         F.col(vec_col),
-        nearest_centroids_col(vec_col, cent_rows, 1, impl)
+        nearest_centroids_col(vec_col, cent_rows, 1)
         .getItem(0)
         .alias("centroid_id"),
     ).withColumn(
@@ -247,18 +242,11 @@ def semdedup(
     if n_clusters is None:
         n = embeddings.count()
         n_clusters = max(16, -(-n // VECS_PER_CLUSTER))
-    # assign_impl="auto": k scales with the corpus here (k ∝ n), so the
-    # trainer's per-iteration n·k assignment is the build bound at
-    # scale — the Arrow engine trains 4-8× faster at 500k×707 with an
-    # identical trajectory (similarity.kmeans_centroids, r11)
+    # k scales with the corpus here (k ∝ n), so the trainer's
+    # per-iteration n·k assignment is the build bound at scale
+    # (similarity.kmeans_centroids)
     cents = kmeans_centroids(
-        embeddings,
-        n_clusters,
-        n_iter,
-        id_col,
-        vec_col,
-        train_mod=train_mod,
-        assign_impl="auto",
+        embeddings, n_clusters, n_iter, id_col, vec_col, train_mod=train_mod
     )
     assigned = pin(semantic_assignments(embeddings, cents, id_col, vec_col))
     pairs = semantic_pairs(assigned, threshold, id_col, vec_col, pin_input=False)

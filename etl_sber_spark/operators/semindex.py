@@ -60,11 +60,7 @@ from pyspark.sql import functions as F
 
 from .materialize import pin
 from .quantize import cosine_q_expr, quantize_cols
-from .similarity import (
-    _centroid_rows,
-    nearest_centroids_col,
-    quantize_vec_sql,
-)
+from .similarity import _centroid_rows, nearest_centroids_col
 from .spread import spread
 
 #: drop_reason vocabulary, in gate order (index first — the settled
@@ -90,7 +86,6 @@ def build_semantic_index(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """(id, cluster_id, q_scale, qvec): the index representation of an
     embedding frame — one projection, zero shuffles, zero joins (the
@@ -119,7 +114,7 @@ def build_semantic_index(
     )
     return spread(embeddings).filter(has_signal).select(
         F.col(id_col),
-        nearest_centroids_col(vec_col, cent_rows, 1, impl)
+        nearest_centroids_col(vec_col, cent_rows, 1)
         .getItem(0)
         .alias("cluster_id"),
         scale.alias("q_scale"),

@@ -14,14 +14,15 @@ Two strategies, per the scale doctrine (BASELINE north star):
   deterministic ±1 pattern (literal arithmetic, identical in the DuckDB
   oracle) rather than RNG, so differential tests are exact.
 
-Both stay UDF-free: dot products are ``zip_with``/``aggregate`` folds
-(left-to-right, deterministic order — required for cross-engine float
-equality).
+Every kernel — LSH bucketing, centroid assignment, the drift distance
+and cosine scoring — has one implementation: a SQL expression, the
+same algebra the DuckDB oracles replay. Dot products are
+``zip_with``/``aggregate`` folds (left-to-right, deterministic order —
+required for cross-engine float equality), so no vector kernel crosses
+a Python UDF boundary.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -192,90 +193,6 @@ def bucket_expr(vec_col: str, n_dims: int, table: int = 0) -> Column:
     )
 
 
-#: The exact binary rendering of bucket_expr's sign test (see
-#: bucket_arrow): round(dot, 6) >= 0  ⟺  dot > THIS double. The double
-#: whose shortest repr is exactly -5e-07 rounds HALF_UP (away from
-#: zero) to -0.000001 — negative; every double above it has a repr
-#: decimal > -0.0000005 (shortest-repr intervals are disjoint and
-#: ordered), rounding to -0.000000 or higher — ≥ 0.
-_SIGN_BOUNDARY = -5.0 / 10 ** (SIM_SCALE + 1)
-
-
-def bucket_arrow(vec_col: Column, n_dims: int, table: int = 0) -> Column:
-    """Arrow twin of :func:`bucket_expr` — same N_PLANES-bit bucket id,
-    bit-equal, vectorized (the LSH half of the ingest projection pair;
-    the IVF half is :func:`nearest_centroids_arrow`). ``vec_col`` is
-    the RAW vector column (cast to double inside, exactly as the
-    expression's CAST — float→double is value-preserving).
-
-    Bit-equality argument:
-
-    - the dot product replays the fold: x·s products elementwise
-      (s = ±1, exact), accumulated left-to-right in IEEE doubles;
-    - the sign test ``round(dot, SIM_SCALE) >= 0`` is EXACTLY
-      ``dot > _SIGN_BOUNDARY`` in binary (see the constant) — no
-      decimal machinery needed, unlike the argmin's near-tie path;
-    - Spark comparison quirk replicated: NaN >= 0 is TRUE in Spark SQL
-      (NaN sorts above every double), so a NaN dot sets its bit;
-    - NULL / length-mismatched vectors: the expression's zip_with
-      null-padding nulls every dot, the CASE falls to ELSE 0 → bucket
-      0; the kernel emits 0 for those rows.
-    - element-level NULLs (r11): a correct-length vector containing a
-      NULL element also nulls every dot in the expression → bucket 0,
-      but Arrow folds the null element into NaN before Python sees it,
-      which would SET every bit (the NaN rule above) — a silent recall
-      loss for stored rows the query-side expression never probes. The
-      distinction is therefore made JVM-side, where it still exists: a
-      codegen'd ``exists(vec, x -> isnull(x))`` maps element-null rows
-      to whole-NULL vectors before the UDF, landing them on the
-      kernel's bucket-0 path. Genuine NaN *values* pass through and
-      set all bits in both engines.
-
-    Pinned against the expression in tests/test_arrow_assign.py incl.
-    a vector placed EXACTLY on the sign boundary."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    S = np.array(
-        [
-            [float(plane_sign(j, p, table)) for j in range(1, n_dims + 1)]
-            for p in range(N_PLANES)
-        ],
-        dtype=np.float64,
-    )
-    bits = np.array([1 << p for p in range(N_PLANES)], dtype=np.int64)
-    boundary = _SIGN_BOUNDARY
-
-    def _bucket(vec):
-        vals = vec.to_numpy()
-        n = len(vals)
-        out = np.zeros(n, dtype=np.int64)
-        idx = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) == n_dims
-        ]
-        if not idx:
-            return pd.Series(out)
-        X = np.stack([vals[i] for i in idx]).astype(np.float64)
-        dots = np.zeros((len(idx), N_PLANES))
-        for j in range(n_dims):
-            dots += X[:, j, None] * S[None, :, j]
-        pos = (dots > boundary) | np.isnan(dots)
-        out[idx] = (pos * bits[None, :]).sum(axis=1)
-        return pd.Series(out)
-
-    _bucket.__annotations__ = {"vec": pd.Series, "return": pd.Series}
-    vec = vec_col.cast("array<double>")
-    # Element-null → whole-NULL pre-map (docstring): exists() on a NULL
-    # array yields NULL, so whole-NULL vectors fall through unchanged.
-    vec = F.when(
-        F.exists(vec, lambda x: x.isNull()), F.lit(None).cast("array<double>")
-    ).otherwise(vec)
-    return pandas_udf(_bucket, "int")(vec)
-
-
 def probe_buckets_expr(
     vec_col: str, n_dims: int, n_probe: int, table: int = 0
 ) -> Column:
@@ -309,113 +226,12 @@ def probe_buckets_expr(
     return F.expr(_let_sql(_dots_sql(vec_col, n_dims, table), "dts", inner))
 
 
-def cosine_sim_round_arrow(q_col: Column, e_col: Column) -> Column:
-    """Arrow twin of the brute-force scoring expression
-    ``round(cosine_similarity(q, e), SIM_SCALE)`` — bit-equal by the
-    same construction as the assignment kernels (block comment above):
-
-    - the dot and both self-dots are replayed as LEFT-TO-RIGHT folds
-      over dimensions (elementwise IEEE double ops, no pairwise-sum
-      shortcuts), exactly the ``F.aggregate`` order;
-    - ``sqrt``/``divide`` are correctly-rounded IEEE ops in both
-      engines; ``try_divide``'s zero-divisor → NULL is replayed (a NaN
-      divisor stays NaN, as the engine's does);
-    - Spark's ``round(x, 6)`` (shortest-repr decimal HALF_UP) is the
-      fast path ``floor(x·10⁶ + 0.5)/10⁶`` except within 1e-8 of a
-      .5 grid boundary, where the exact :func:`_round_sim_scale_py`
-      decimal replay decides (|x| ≤ 1 ⇒ the scaled product's absolute
-      error is ≲1e-10, so the 1e-8 band over-covers every value the
-      fast path could misround);
-    - NULL vectors and length-mismatched pairs → NULL, as the
-      expression's zip_with NULL padding yields. (Element-level nulls
-      inside an array are outside this contract, as for the other
-      kernels: Arrow surfaces them as NaN.)
-    - NaN results (NaN inputs, or a NaN divisor) cannot cross the
-      Arrow boundary as doubles (pandas→Arrow folds NaN into null,
-      verified live), so the UDF emits ``struct<v, n>`` and one
-      codegen'd projection reconstitutes ``double('NaN')`` where
-      ``n`` — values stay bit-equal including NaN, which MUST survive
-      because it sorts above every real similarity in the top-k tail.
-
-    Pinned against the expression on fixture embeddings, zero/NaN/
-    short/NULL vectors and constructed .5-boundary sims
-    (tests/test_arrow_assign.py). Serves the recall probe
-    (annindex._recall_probe) — sample × corpus-sample pair rows whose
-    interpreted fold was the probe's dominant term; the graded
-    q_cosine_topk path keeps the expression (oracle contract)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _sim(qv, ev):
-        qs, es = qv.to_numpy(), ev.to_numpy()
-        n = len(qs)
-        out = [None] * n
-        is_nan = [False] * n
-        idx = [
-            i
-            for i in range(n)
-            if qs[i] is not None
-            and es[i] is not None
-            and len(qs[i]) == len(es[i])
-        ]
-        # group by dimensionality so each group stacks rectangles
-        by_d: dict[int, list[int]] = {}
-        for i in idx:
-            by_d.setdefault(len(qs[i]), []).append(i)
-        for d, rows in by_d.items():
-            Q = np.stack([qs[i] for i in rows]).astype(np.float64)
-            E = np.stack([es[i] for i in rows]).astype(np.float64)
-            dot = np.zeros(len(rows))
-            nq = np.zeros(len(rows))
-            ne = np.zeros(len(rows))
-            t = np.empty(len(rows))  # reused temp (r11): same ops,
-            for j in range(d):  # left fold over dims, exactly
-                np.multiply(Q[:, j], E[:, j], out=t)
-                dot += t
-                np.multiply(Q[:, j], Q[:, j], out=t)
-                nq += t
-                np.multiply(E[:, j], E[:, j], out=t)
-                ne += t
-            div = np.sqrt(nq) * np.sqrt(ne)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = dot / div
-            scaled = sim * 1e6
-            frac = np.abs(scaled - np.floor(scaled) - 0.5)
-            fast = np.floor(scaled + 0.5) / 1e6
-            for r, i in enumerate(rows):
-                if div[r] == 0.0:
-                    continue  # try_divide: NULL
-                v = float(sim[r])
-                if not math.isfinite(v):
-                    is_nan[i] = math.isnan(v)
-                    out[i] = None if math.isnan(v) else v
-                elif frac[r] < 1e-8:
-                    out[i] = _round_sim_scale_py(v)
-                else:
-                    out[i] = float(fast[r])
-        return pd.DataFrame({"v": pd.Series(out, dtype=object), "n": is_nan})
-
-    _sim.__annotations__ = {
-        "qv": pd.Series,
-        "ev": pd.Series,
-        "return": pd.DataFrame,
-    }
-    s = pandas_udf(_sim, "struct<v: double, n: boolean>")(
-        q_col.cast("array<double>"), e_col.cast("array<double>")
-    )
-    return F.when(s.getField("n"), F.lit(float("nan"))).otherwise(
-        s.getField("v")
-    )
-
-
 def cosine_topk_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sim_impl: str = "expr",
 ) -> DataFrame:
     """Exact top-k neighbors of each query vector (self-matches excluded).
 
@@ -423,36 +239,23 @@ def cosine_topk_bruteforce(
     scored in place during the scan — no shuffle until the per-query
     top-k reduction. Output: (query_id, vec_id, sim rounded, rank).
 
-    ``sim_impl`` (r10) picks the scoring engine: the DEFAULT stays
-    ``"expr"`` because this operator is the graded q_cosine_topk
-    surface (its fold IS the DuckDB oracle contract); ``"arrow"`` /
-    ``"auto"`` switch to :func:`cosine_sim_round_arrow` — bit-equal,
-    vectorized — for sample × corpus callers like the recall probe."""
-    if sim_impl == "auto":
-        sim_impl = "arrow" if arrow_assign_available() else "expr"
-    if sim_impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"sim_impl={sim_impl!r}: expected 'auto', 'arrow' or 'expr'"
-        )
+    The score is ``round(cosine_similarity(q, e), SIM_SCALE)``, the fold
+    the graded q_cosine_topk DuckDB oracle replays; the recall probes of
+    operators/annindex.py score their sample × corpus pairs with the
+    same expression."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    if sim_impl == "arrow":
-        sim = cosine_sim_round_arrow(
-            F.col("q_vec"), F.col(f"e.{vec_col}")
-        )
-    else:
-        sim = F.round(
-            cosine_similarity(F.col("q_vec"), F.col(f"e.{vec_col}")),
-            SIM_SCALE,
-        )
     scored = (
         spread(embeddings).alias("e")
         .join(F.broadcast(q), F.col("query_id") != F.col(f"e.{id_col}"))
         .select(
             "query_id",
             F.col(f"e.{id_col}").alias(id_col),
-            sim.alias("sim"),
+            F.round(
+                cosine_similarity(F.col("q_vec"), F.col(f"e.{vec_col}")),
+                SIM_SCALE,
+            ).alias("sim"),
         )
     )
     return _per_query_topk(scored, k, id_col)
@@ -474,14 +277,6 @@ def _per_query_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-def _sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a.cast("array<double>"), b.cast("array<double>"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
@@ -490,7 +285,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     *,
     train_mod: int | None = None,
-    assign_impl: str = "expr",
 ) -> DataFrame:
     """Deterministic mini k-means for IVF coarse quantization.
 
@@ -519,18 +313,11 @@ def kmeans_centroids(
     ``k`` rows — callers read the actual list size rather than assuming
     k (documented shrinkage; re-seeding would break determinism).
 
-    ``assign_impl`` (r11) picks the PER-ITERATION assignment engine —
-    the same bit-equal pair as every other assignment surface
-    (nearest_centroids_col): ``"expr"`` (default — the interpreted SQL
-    fold whose text the q_ivf_topk DuckDB oracle replays; also the
-    faster choice at small n·k, where per-iteration cost is job
-    scheduling and the Arrow round-trip measured neutral-to-slower,
-    1.60 vs 1.78 s at sf0.1 k=8), ``"arrow"``, or ``"auto"``. At scale
-    the engines separate hard: 500k vectors × k=707 trained 14.6-17.9 s
-    (expr) vs 1.8-4.5 s (arrow), trajectories IDENTICAL (the r10
-    bit-equality machinery; pinned in tests/test_arrow_assign.py).
-    Index builders (operators/annindex.py) and the scale tools pass
-    "auto"; the graded inline trainer keeps the default.
+    Per-iteration assignment is :func:`nearest_centroids_expr`, the SQL
+    fold whose text the q_ivf_topk DuckDB oracle replays. It is an
+    interpreted higher-order-function fold, so its cost grows with
+    k × n_dims per row: OPTIMIZATION_r11.md records 500k vectors ×
+    k=707 at 14.6-17.9 s of training.
 
     Training arithmetic is exact (round 3): vectors are quantized to
     integers (``quantize_vec``), so per-cluster sums are
@@ -589,25 +376,15 @@ def kmeans_centroids(
         + ", ".join(f"sum(element_at(_qv, {d + 1}))" for d in range(n_dims))
         + ")"
     )
-    impl = assign_impl
-    if impl == "auto":
-        impl = "arrow" if arrow_assign_available() else "expr"
-    if impl not in ("arrow", "expr"):
-        raise ValueError(
-            f"assign_impl={assign_impl!r}: expected 'auto', 'arrow' or 'expr'"
-        )
     for _ in range(n_iter):
         # element-wise mean: exact bigint sums per dimension + count,
         # then one float division of identical integer operands —
         # order-independent by construction, and Python/Spark/DuckDB
         # all perform the identical IEEE division
-        assign = (
-            nearest_centroids_arrow(F.col("_qv"), cent_rows, 1)[0]
-            if impl == "arrow"
-            else nearest_centroids_expr("_qv", cent_rows, 1)[0]
-        )
         summed = (
-            qemb.withColumn("centroid_id", assign)
+            qemb.withColumn(
+                "centroid_id", nearest_centroids_expr("_qv", cent_rows, 1)[0]
+            )
             .groupBy("centroid_id")
             .agg(
                 F.expr("count(1)").alias("n"),
@@ -713,315 +490,27 @@ def nearest_centroid_dist_expr(
     )
 
 
-# ---------------------------------------------------------------------------
-# Arrow fast path for centroid assignment (r10)
-# ---------------------------------------------------------------------------
-#
-# The interpreted higher-order-function argmin (nearest_centroids_expr)
-# was the single biggest CPU sink in vector ingest and the e2e serving
-# build (~70% of ingest wall, tools/profile_vector_ingest.py; SCALE.md).
-# Spark does not codegen lambda HOFs, so every per-centroid distance is
-# k·d interpreter dispatches per row. The Arrow path below replays the
-# IDENTICAL IEEE arithmetic in vectorized numpy — measured 16× faster
-# at k=64 and bit-equal on every pinned corpus (tests/test_arrow_assign
-# .py) — so it is the default for the ingest-time assignment
-# projections, while the graded q_ivf_topk inline path and the Lloyd
-# trainer stay on the SQL expression (their algebra IS the DuckDB
-# oracle contract, so their execution engine never changes).
-#
-# Why bit-equality holds (the whole point — "fast but approximately
-# the same assignment" would silently fracture every stored
-# centroid_id column):
-#
-# - quantization stays JVM-side: the UDF receives the array<bigint>
-#   produced by the SAME quantize_vec expression both paths share, so
-#   Spark's decimal-string HALF_UP round never needs a Python replica;
-# - int64→float64 conversion is correctly-rounded in both engines, and
-#   the centroid literals are the same doubles the SQL string renders
-#   (repr(float) round-trips the bits);
-# - the fold order is replayed exactly: (x_j−y_j)² terms elementwise,
-#   accumulated LEFT-TO-RIGHT over dimensions — each numpy elementwise
-#   op is the same IEEE-754 double op the interpreted fold performs;
-# - ``round(d, SIM_SCALE)`` only matters where it can change the
-#   ARGMIN: rounding is monotone, and |round6(a)−a| ≤ 5e-7 + ulp slop
-#   (and is exactly identity for a ≥ 1e11, where a shortest repr's ≤17
-#   significant digits cannot reach the 1e-6 place), so two distances
-#   with a raw gap > ~3.3e-5 can neither reorder nor tie. Rows whose
-#   sorted distances have any adjacent gap in (0, _TIE_EPS=1e-4) take
-#   a slow path that replays Spark's Round — shortest-repr decimal,
-#   HALF_UP at 1e-6 (:func:`_round_sim_scale_py`, pinned against the
-#   live engine on 24.6k adversarial values incl. random bit patterns
-#   and .5-boundary snaps: 0 mismatches) — everything else keeps the
-#   raw order with the same stable centroid-id tie-break. Exact raw
-#   ties (gap == 0) need no rounding at all: equal raw ⇒ equal rounded
-#   ⇒ the same centroid-id tie-break both ways.
-# - NULL / length-mismatched vectors: the expression's zip_with pads
-#   with NULL, so every distance is NULL and the struct sort falls
-#   back to ascending centroid_id (verified live; pinned in tests) —
-#   the kernel emits the first n_probe ids for those rows.
-
-#: Raw-distance gap below which the kernel consults the exact decimal
-#: rounding before ordering (see block comment above; 3× the worst-case
-#: displacement bound at the 1e11 identity threshold).
-_TIE_EPS = 1e-4
-
-
-def _make_round_sim_scale_py(scale: int):
-    """Factory for the exact-round replay below. The returned function
-    is NESTED (qualname carries ``<locals>``), so cloudpickle serializes
-    it BY VALUE into any UDF closure that references it — a module-level
-    ``def`` would be pickled by reference to this module, which executor
-    Python workers cannot import when the driver's cwd is not the repo
-    (the real driver harness — caught live by a /tmp driver-sim in r11).
-    Same rule as inference.hash_encoder's self-contained closure."""
-
-    def _round(x: float) -> float:
-        """Spark ``round(x, scale)`` replayed in Python: quantize the
-        SHORTEST-REPR decimal (what ``BigDecimal.valueOf`` sees) HALF_UP
-        at 1e-scale, then back to the nearest double. Non-finite values
-        pass through, as the engine's Round does. Differentially pinned
-        against the live engine in tests/test_arrow_assign.py."""
-        import decimal
-        import math
-
-        if not math.isfinite(x):
-            return x
-        with decimal.localcontext() as ctx:
-            ctx.prec = 60  # distances carry ~1e21·1e-6 → up to 27 digits
-            return float(
-                decimal.Decimal(repr(x)).quantize(
-                    decimal.Decimal(1).scaleb(-scale),
-                    rounding=decimal.ROUND_HALF_UP,
-                )
-            )
-
-    return _round
-
-
-_round_sim_scale_py = _make_round_sim_scale_py(SIM_SCALE)
-
-
-def _make_nearest_probe_kernel(round_fn, tie_eps: float):
-    """Factory twin of :func:`_make_round_sim_scale_py` — the kernel is
-    built nested so UDF closures embed it by value (executor-importable
-    without this repo on sys.path)."""
-
-    def _kernel(vals, C, cids, n_out):
-        """Pure batch kernel behind :func:`nearest_centroids_arrow`:
-        ``vals`` is a sequence of quantized int64 vectors (or None),
-        ``C`` the k×d float64 centroid matrix, ``cids`` the ascending
-        int32 centroid ids. Returns a list of n_out-id lists ordered by
-        (round(d, SIM_SCALE), centroid_id) — the exact
-        :func:`nearest_centroids_expr` contract. Module-level alias
-        ``_nearest_probe_kernel`` exists for direct unit tests (no
-        Spark needed to pin the near-tie fallback)."""
-        import numpy as np
-
-        k, d = C.shape
-        fallback = [int(c) for c in cids[:n_out]]
-        n = len(vals)
-        out = [fallback] * n
-        idx = [
-            i for i, v in enumerate(vals) if v is not None and len(v) == d
-        ]
-        if not idx:
-            return out
-        X = np.stack([vals[i] for i in idx]).astype(np.float64)
-        acc = np.zeros((len(idx), k))
-        t = np.empty_like(acc)  # reused: a fresh (n, k) temp per dim
-        for j in range(d):      # was the kernel's main allocation cost
-            np.subtract(X[:, j, None], C[None, :, j], out=t)
-            np.multiply(t, t, out=t)
-            acc += t  # left fold over dims: ((0.0+t_0)+t_1)+… exactly
-        if n_out == 1 and k >= 2:
-            # top-1 fast path (r11, risky rule widened r12):
-            # round(d, SIM_SCALE) is MONOTONE, and the tie grid is
-            # 1e-SIM_SCALE while tie_eps is 100× coarser — so when NO
-            # other element sits within (0, tie_eps) of the row min,
-            # the rounded winner equals the raw winner (every gap from
-            # the min is either ≥ tie_eps ⇒ still strict after
-            # rounding, or exactly 0 ⇒ equal both ways, where
-            # np.argmin's first-occurrence rule IS the stable
-            # lowest-centroid-id tie-break). ANY element inside
-            # (0, tie_eps) of the min forces the exact decimal replay:
-            # checking only the (min, second-min) gap — the r11 rule —
-            # missed an exact top-2 tie (gap 0) whose LOWER-id third
-            # element lay within the rounding grid of the min and so
-            # won the rounded stable order (ADVICE r11, reproduced in
-            # test_kernel_top1_fast_path_matches_general). Still
-            # O(n·k) min+compare+argmin vs the general path's
-            # O(n·k log k) sort+argsort.
-            dmin = acc.min(axis=1, keepdims=True)
-            dgap = acc - dmin
-            risky1 = ((dgap > 0) & (dgap < tie_eps)).any(axis=1)
-            amin = np.argmin(acc, axis=1)
-            for r, i in enumerate(idx):
-                if risky1[r]:
-                    rounded = np.array([round_fn(v) for v in acc[r]])
-                    j = int(np.argsort(rounded, kind="stable")[0])
-                else:
-                    j = int(amin[r])
-                out[i] = [int(cids[j])]
-            return out
-        srt = np.sort(acc, axis=1)
-        gaps = np.diff(srt, axis=1)
-        risky = np.any((gaps > 0) & (gaps < tie_eps), axis=1)
-        order = np.argsort(acc, axis=1, kind="stable")
-        for r, i in enumerate(idx):
-            o = order[r]
-            if risky[r]:
-                rounded = np.array([round_fn(v) for v in acc[r]])
-                o = np.argsort(rounded, kind="stable")
-            out[i] = [int(cids[j]) for j in o[:n_out]]
-        return out
-
-    return _kernel
-
-
-_nearest_probe_kernel = _make_nearest_probe_kernel(_round_sim_scale_py, _TIE_EPS)
-
-
-def nearest_centroids_arrow(
-    qv_col: Column,
-    cent_rows: list[tuple[int, list[float]]],
-    n_probe: int,
-) -> Column:
-    """Arrow-batched twin of :func:`nearest_centroids_expr` — same
-    array<int> of probed centroid ids, bit-equal by construction (see
-    the block comment above), ~16× faster at k=64. ``qv_col`` must be
-    the QUANTIZED vector column/expression (``quantize_vec(...)``), so
-    the engine-exact quantization round stays JVM-side. Still a pure
-    projection: no shuffle, row order preserved, only the bigint array
-    crosses the Arrow boundary per batch."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cids = np.array([cid for cid, _ in cent_rows], dtype=np.int32)
-    C = np.array([vec for _, vec in cent_rows], dtype=np.float64)
-    n_out = min(n_probe, len(cent_rows))
-
-    def _probe(qv):
-        return pd.Series(
-            _nearest_probe_kernel(qv.to_numpy(), C, cids, n_out)
-        )
-
-    # real class annotations, set explicitly: this module postpones
-    # annotations (PEP 563), and pandas_udf cannot infer its eval type
-    # from the resulting strings
-    _probe.__annotations__ = {"qv": pd.Series, "return": pd.Series}
-    return pandas_udf(_probe, "array<int>")(qv_col)
-
-
-def nearest_centroid_dist_arrow(
-    qv_col: Column, cent_rows: list[tuple[int, list[float]]]
-) -> Column:
-    """Arrow twin of :func:`nearest_centroid_dist_expr` — the drift
-    monitor's distance, bit-equal by construction: the raw fold is the
-    same IEEE replay as :func:`nearest_centroids_arrow`, and the
-    output value needs NO near-tie machinery because rounding is
-    monotone — the sorted struct's first ``d`` is min-of-rounded =
-    rounded-of-min, whichever centroid id wins the tie. Every row's
-    min distance goes through the exact decimal round (sample-sized
-    inputs — the probe runs on the mod-16 ladder sample), then
-    ``sqrt(d)/QUANT`` elementwise (both correctly-rounded IEEE ops,
-    same as the JVM's). NULL / length-mismatched vectors yield NULL,
-    as the expression's NULL fold does. The build-time probe at
-    k=707 × 31k sample rows measured 62 s on the interpreted
-    expression — this path exists because the drift probe scales with
-    k × sample, not the corpus, and k grows with √n now."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.array([vec for _, vec in cent_rows], dtype=np.float64)
-    k, d = C.shape
-    quant = float(QUANT)
-
-    def _dist(qv):
-        vals = qv.to_numpy()
-        n = len(vals)
-        out = [None] * n
-        idx = [
-            i for i, v in enumerate(vals) if v is not None and len(v) == d
-        ]
-        if not idx:
-            return pd.Series(out, dtype=object)
-        X = np.stack([vals[i] for i in idx]).astype(np.float64)
-        acc = np.zeros((len(idx), k))
-        t = np.empty_like(acc)  # reused temp (r11): same ops, no
-        for j in range(d):      # per-dim (n, k) allocation
-            np.subtract(X[:, j, None], C[None, :, j], out=t)
-            np.multiply(t, t, out=t)
-            acc += t
-        mins = acc.min(axis=1)
-        for r, i in enumerate(idx):
-            out[i] = float(
-                np.sqrt(_round_sim_scale_py(float(mins[r]))) / quant
-            )
-        return pd.Series(out, dtype=object)
-
-    _dist.__annotations__ = {"qv": pd.Series, "return": pd.Series}
-    return pandas_udf(_dist, "double")(qv_col)
-
-
-def nearest_centroid_dist_col(
-    vec_col: str,
-    cent_rows: list[tuple[int, list[float]]],
-    impl: str = "auto",
-) -> Column:
-    """Engine-picking twin of :func:`nearest_centroids_col` for the
-    drift-monitor distance (build stamp, ann_status, restamp — all
-    three MUST use one definition or baselines drift). Identical
-    values either way (pinned in tests/test_arrow_assign.py)."""
-    if impl == "auto":
-        impl = "arrow" if arrow_assign_available() else "expr"
-    if impl == "arrow":
-        return nearest_centroid_dist_arrow(quantize_vec(vec_col), cent_rows)
-    if impl == "expr":
-        return nearest_centroid_dist_expr(quantize_vec_sql(vec_col), cent_rows)
-    raise ValueError(
-        f"impl={impl!r}: expected 'auto', 'arrow' or 'expr'"
-    )
-
-
-def arrow_assign_available() -> bool:
-    """True when the Arrow assignment path can run here (numpy +
-    pandas + pyarrow importable) — the ``impl="auto"`` probe."""
-    try:
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
 def nearest_centroids_col(
     vec_col: str,
     cent_rows: list[tuple[int, list[float]]],
     n_probe: int,
-    impl: str = "auto",
 ) -> Column:
     """The shared assignment column: probed centroid ids for a RAW
-    float vector column, via the engine picked by ``impl`` — ``"expr"``
-    (the interpreted SQL fold, the oracle-contract form), ``"arrow"``
-    (the vectorized twin), or ``"auto"`` (arrow when available, the
-    production default). Both produce identical ids on every pinned
-    corpus; quantization is the same JVM expression either way."""
-    if impl == "auto":
-        impl = "arrow" if arrow_assign_available() else "expr"
-    if impl == "arrow":
-        return nearest_centroids_arrow(
-            quantize_vec(vec_col), cent_rows, n_probe
-        )
-    if impl == "expr":
-        return nearest_centroids_expr(
-            quantize_vec_sql(vec_col), cent_rows, n_probe
-        )
-    raise ValueError(
-        f"impl={impl!r}: expected 'auto', 'arrow' or 'expr'"
+    float vector column — :func:`nearest_centroids_expr` over the
+    quantized vector, so callers never handle the quantization."""
+    return nearest_centroids_expr(
+        quantize_vec_sql(vec_col), cent_rows, n_probe
     )
+
+
+def nearest_centroid_dist_col(
+    vec_col: str, cent_rows: list[tuple[int, list[float]]]
+) -> Column:
+    """The drift-monitor distance for a RAW float vector column —
+    :func:`nearest_centroid_dist_expr` over the quantized vector. The
+    build stamp, ann_status and the restamp all call this one
+    definition, so their baselines cannot drift apart."""
+    return nearest_centroid_dist_expr(quantize_vec_sql(vec_col), cent_rows)
 
 
 def assign_to_centroid(
@@ -1030,7 +519,6 @@ def assign_to_centroid(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probe: int = 1,
-    impl: str = "auto",
 ) -> DataFrame:
     """(id, centroid_id): the ``n_probe`` nearest centroids per vector
     (squared L2 in the quantized training space, deterministic
@@ -1039,13 +527,12 @@ def assign_to_centroid(
     for IVF queries. Centroids become driver-side literals
     (metadata-scale), so assignment is a PROJECTION — zero shuffles
     over the corpus, the ingest-time cluster-column shape SCALE.md
-    promises. ``impl`` picks the assignment engine (see
-    :func:`nearest_centroids_col`); results are identical."""
+    promises."""
     cent_rows = _centroid_rows(centroids)
     return spread(embeddings).select(
         F.col(id_col),
         F.explode(
-            nearest_centroids_col(vec_col, cent_rows, n_probe, impl)
+            nearest_centroids_col(vec_col, cent_rows, n_probe)
         ).alias("centroid_id"),
     )
 
@@ -1065,7 +552,6 @@ def cosine_topk_ivf(
     qvec_col: str | None = None,
     scale_col: str | None = None,
     qnorm_col: str | None = None,
-    assign_impl: str = "expr",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means coarse quantizer,
     candidates = vectors in the query's ``n_probe`` nearest lists.
@@ -1147,18 +633,9 @@ def cosine_topk_ivf(
         if centroid_col != "centroid_id":
             cand = cand.withColumnRenamed(centroid_col, "centroid_id")
     else:
-        # assign_impl (r10): the internal probes (annindex._recall_probe
-        # runs this at n_lists = √n over the ladder sample) pass
-        # "auto"/"arrow" for the vectorized engine; the DEFAULT stays
-        # "expr" so no caller's execution engine changes implicitly —
-        # bit-equal either way (tests/test_arrow_assign.py). The graded
-        # q_ivf_topk passes "auto" EXPLICITLY since the r11 optimization
-        # round (equivalence re-proven against the DuckDB oracle at
-        # both SFs; 2.78 → 2.23 s at sf0.1)
         cand = spread(embeddings).withColumn(
             "centroid_id",
-            nearest_centroids_col(vec_col, cent_rows, 1, assign_impl)
-            .getItem(0),
+            nearest_centroids_col(vec_col, cent_rows, 1).getItem(0),
         )
     q = queries.select(
         F.col(id_col).alias("query_id"),

@@ -746,23 +746,13 @@ def q_ivf_topk(spark, sf_dir):
     iterative algorithm is differential-tested, not just its row count.
     Recall-vs-probes quality gate stays in tests/test_ivf.py.
 
-    assign_impl="auto" (r11 optimization round): the corpus-side
-    assignment projection runs on the vectorized Arrow engine when
-    numpy/pandas/pyarrow are importable, falling back to the
-    interpreted SQL fold otherwise. The two engines are BIT-EQUAL on
-    every input (r10's tests/test_arrow_assign.py: whole-column
-    equality, constructed sub-rounding near-ties, NULL/short/empty
-    vectors, a 24.6k-value engine-rounding differential), so the
-    oracle hash is unchanged — verified by collect-equality at sf0.01
-    AND sf0.1 plus the full driver sim this round. Measured 2.78 →
-    2.23 s at sf0.1 (min-of-3, same session; the interpreted
-    higher-order-function argmin is the cost, guide §4). The k-means
-    TRAINER keeps the expr engine: at bench scale its per-iteration
-    cost is job scheduling, and the Arrow round-trip measured neutral
-    to slightly slower there (1.60 vs 1.78 s min-of-3)."""
+    The trainer and the corpus-side assignment run the same SQL argmin
+    (similarity.nearest_centroids_expr) whose text the oracle replays;
+    the interpreted higher-order-function fold is the query's main
+    cost (guide §4)."""
     e = load_table(spark, sf_dir, "embeddings")
     return sim.cosine_topk_ivf(
-        e, e.filter(F.col("vec_id") < 5), k=3, n_lists=8, assign_impl="auto"
+        e, e.filter(F.col("vec_id") < 5), k=3, n_lists=8
     )
 
 

@@ -29,6 +29,27 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _executed_plans(spark, fn):
+    """``(fn(), physical plans of the SQL executions fn started)``, read
+    from the session's SQL status store. The store is fed by listener
+    events, so the listener bus is drained before each read."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def snapshot():
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = snapshot()
+    out = fn()
+    return out, [p for i, p in snapshot().items() if i not in before]
+
+
 def test_ivf_index_round_trip_versioned(spark, emb, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     c1 = ai.train_ivf_index(emb, n_lists=8, n_iter=2)
@@ -150,6 +171,34 @@ def test_build_ann_index_one_call(spark, emb, tmp_path):
 
     idx = build_semantic_index(emb, cents)
     assert idx.count() > 0
+
+
+def test_vector_kernels_start_no_python_worker(spark, emb, tmp_path):
+    """Centroid assignment, LSH bucketing, the drift distance and cosine
+    scoring are SQL expressions: no plan of the index build, the
+    serving columns, the status probe or the brute-force search holds
+    a Python evaluation node (ArrowEvalPython or BatchEvalPython)."""
+    sub = emb.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
+    cents, plans = _executed_plans(
+        spark, lambda: ai.train_ivf_index(sub, n_lists=4, n_iter=2)
+    )
+    assert plans  # the Lloyd iterations ran as SQL executions
+    for df in (
+        ai.materialize_ivf_assignments(sub, cents),
+        ai.materialize_lsh_buckets(sub, N_DIMS, n_tables=2),
+        sim.cosine_topk_bruteforce(sub, sub.limit(3), k=3),
+    ):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    stored = ai.build_ann_index(wh, sub, n_lists=4, n_iter=1)
+    stored.write.parquet(str(tmp_path / "wh" / "ann_serving"))
+    st, status_plans = _executed_plans(
+        spark, lambda: ai.ann_status(wh, recall_queries=4)
+    )
+    assert st["n_sampled"] > 0 and status_plans
+    for plan in plans + status_plans:
+        assert "EvalPython" not in plan, plan
 
 
 def test_plane_signs_match_sql_formula(spark):

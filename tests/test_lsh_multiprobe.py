@@ -16,12 +16,16 @@ Two recall measurements, because they answer different questions:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from etl_sber_spark.operators.similarity import (
     N_PLANES,
+    bucket_expr,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
+    plane_sign,
     probe_buckets_expr,
 )
 
@@ -194,3 +198,64 @@ def test_multitable_requires_per_table_stored_columns(spark):
             bucket_col="bucket",
             n_tables=2,
         )
+
+
+def test_bucket_sign_boundary_and_degenerate_vectors(spark):
+    """Bit p is set iff round(<v, plane_p>, 6) >= 0. With 1-dim planes
+    the dot is ±v, so v = -5e-07 lands every dot exactly on the sign
+    boundary: that double rounds HALF_UP away from zero to -0.000001,
+    so +1 planes clear their bit and -1 planes (dot +5e-07) set it; one
+    ulp toward zero rounds to -0.000000 and sets every bit. NULL, empty
+    and wrong-length vectors, and a NULL element, null every dot and
+    fall to bucket 0; a NaN dot sets its bit (NaN >= 0 in Spark SQL)."""
+    boundary = -5e-07
+    df = spark.createDataFrame(
+        [
+            (1, None),
+            (2, []),
+            (3, [0.1, 0.2]),  # longer than n_dims=1
+            (4, [float("nan")]),
+            (5, [boundary]),
+            (6, [math.nextafter(boundary, 0.0)]),
+            (7, [0.0]),
+            (8, [-0.0]),
+            (9, [None]),  # element-level NULL, correct length
+        ],
+        "id int, embedding array<double>",
+    )
+    got = {
+        r.id: r.b
+        for r in df.select("id", bucket_expr("embedding", 1, 0).alias("b"))
+        .collect()
+    }
+    full = sum(1 << p for p in range(N_PLANES))
+    neg_planes = sum(
+        1 << p for p in range(N_PLANES) if plane_sign(1, p, 0) == -1
+    )
+    assert got == {
+        1: 0, 2: 0, 3: 0, 4: full, 5: neg_planes, 6: full, 7: full,
+        8: full, 9: 0,
+    }
+
+
+def test_bucket_element_null_in_wide_vector(spark):
+    """One NULL element in an otherwise valid 64-dim vector nulls every
+    plane's dot, so the bucket is 0; a NaN element in the same place
+    sets every bit."""
+    base = [0.25 * ((i % 7) - 3) for i in range(64)]
+    with_null = list(base)
+    with_null[17] = None
+    with_nan = list(base)
+    with_nan[17] = float("nan")
+    df = spark.createDataFrame(
+        [(1, base), (2, with_null), (3, with_nan)],
+        "id int, embedding array<double>",
+    )
+    got = {
+        r.id: r.b
+        for r in df.select("id", bucket_expr("embedding", 64, 0).alias("b"))
+        .collect()
+    }
+    assert got[2] == 0
+    assert got[3] == sum(1 << p for p in range(N_PLANES))
+    assert got[1] not in (0, got[3])

@@ -178,8 +178,7 @@ def main() -> None:
         train_mod = max(1, n_docs // 50_000)
         k = suggest_n_lists(n_docs, n_docs // train_mod)
         cents = kmeans_centroids(
-            emb, k, 2, "doc_id", "embedding", train_mod=train_mod,
-            assign_impl="auto",
+            emb, k, 2, "doc_id", "embedding", train_mod=train_mod
         ).localCheckpoint()
         save_ivf_index(wh, cents)
         serving = quantize_embeddings(

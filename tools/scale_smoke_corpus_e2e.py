@@ -279,8 +279,7 @@ def main() -> None:
             # here by the serving-layout int8 pair scoring.
             k = suggest_n_lists(n_docs, n_docs // train_mod)
             cents = kmeans_centroids(
-                emb, k, 2, "doc_id", "embedding", train_mod=train_mod,
-                assign_impl="auto",
+                emb, k, 2, "doc_id", "embedding", train_mod=train_mod
             ).localCheckpoint()
             save_ivf_index(wh, cents)
             serving = quantize_embeddings(
