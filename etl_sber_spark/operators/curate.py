@@ -33,7 +33,6 @@ from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard,
-    shingle_hashes,
     shingles,
 )
 from .materialize import pin
@@ -65,14 +64,12 @@ def curate_corpus(
     min_quality: float = 0.4,
     near_dup_jaccard: float = 0.8,
     transitive: bool = False,
-    near_dup_strategy: str = "clique",
     embeddings: DataFrame | None = None,
     emb_id_col: str = "vec_id",
     semantic_threshold: float = 0.95,
     semantic_clusters: int = 16,
     semantic_keep: str = "farthest",
     semantic_centroids: DataFrame | None = None,
-    materialize_annotations: bool = True,
     classifier_weights: list[float] | None = None,
     classifier_threshold: float = 0.5,
 ) -> DataFrame:
@@ -183,16 +180,10 @@ def curate_corpus(
     # materialized once — but a cache() entry would outlive the call
     # (CacheManager holds it until an explicit unpersist nobody can
     # issue on an internal frame). A local checkpoint is freed by the
-    # ContextCleaner once the returned DataFrame is dropped.
-    #
-    # ``materialize_annotations=False`` is the 100 TB storage knob: the
-    # checkpoint stores the FULL annotated corpus (text included) in
-    # executor memory/disk blocks — a transient corpus-sized copy.
-    # Skipping it trades that storage for recomputing the (pure,
-    # deterministic) annotation regexes once per consumer pass —
-    # output-identical either way (pinned by test_curate), and often
-    # the right trade when the corpus dwarfs cluster storage while CPU
-    # is cheap at scan time.
+    # ContextCleaner once the returned DataFrame is dropped. It is a
+    # transient corpus-sized copy (text included) in executor blocks;
+    # recomputing the annotation regexes per consumer instead measured
+    # slower (q_curate at sf0.1: 4.27 vs 2.67 s, OPTIMIZATION_r11.md).
     annotated = annotated.withColumn("_cheap_reason", cheap_reason)
     if classifier_weights is not None:
         from .classifier import hashed_token_features, quality_scores
@@ -222,8 +213,7 @@ def curate_corpus(
                 ),
             )
         )
-    if materialize_annotations:
-        annotated = annotated.localCheckpoint(eager=True)
+    annotated = annotated.localCheckpoint(eager=True)
 
     clean = annotated.filter(F.col("_cheap_reason").isNull())
 
@@ -250,67 +240,25 @@ def curate_corpus(
     # jaccard verify -> drop the larger id of each confirmed pair.
     # ONE shingle frame feeds both minhash and the jaccard verify —
     # the shingle build (tokenize + 3-gram explode + distinct) is the
-    # dominant text-side cost and must not run twice. Pin layout per
-    # strategy (r12, settling VERDICT r11 #2): the graded clique path
-    # pins RAW 3-gram strings — the r11 narrow pre-hash measured −14%
-    # at sf0.1 in the driver's artifact and lost the r12 interleaved
-    # A/B (string 2.73 vs narrow 2.90 s min-of-3; hashing before the
-    # checkpoint serializes md5 into the pin-write stage). The
-    # anchor_first SCALE path keeps the narrow hash64 layout
-    # (dedup.shingle_hashes): its pin is re-read by two verify rounds
-    # and checkpoint bytes dominate at the 100×/1000× corpus factors
-    # it exists for. Bit-identical downstream values either way
-    # (dedup._sh64_col applies the same hash64 lazily).
+    # dominant text-side cost and must not run twice. The pin stores
+    # the RAW 3-gram strings (r12, settling VERDICT r11 #2): a
+    # pre-hashed pin lost the r12 interleaved A/B (string 2.73 vs
+    # narrow 2.90 s min-of-3 at sf0.1; hashing before the checkpoint
+    # serializes md5 into the pin-write stage).
     survivors = clean.join(
         exact_drops, clean[id_col] == exact_drops["_drop_id"], "left_anti"
     )
-    if near_dup_strategy not in ("clique", "anchor_first"):
-        raise ValueError(
-            f"near_dup_strategy={near_dup_strategy!r}: expected 'clique' "
-            "or 'anchor_first'"
-        )
-    if near_dup_strategy == "anchor_first" and transitive:
-        raise ValueError(
-            "near_dup_strategy='anchor_first' cannot serve transitive "
-            "mode: its confirmed EDGE set is thinner than the clique's "
-            "(only the greedy drop SET is equivalent — see "
-            "dedup.anchor_first_near_dup_drops), so connected components "
-            "could split clusters. Use the default strategy with "
-            "transitive=True"
-        )
-    _sh_fn = (
-        shingle_hashes if near_dup_strategy == "anchor_first" else shingles
+    sh = pin(shingles(survivors, id_col, text_col))
+    pairs = lsh_candidate_pairs(
+        minhash_signatures(survivors, id_col, text_col, sh=sh), id_col
     )
-    sh = pin(_sh_fn(survivors, id_col, text_col))
-    if not transitive and near_dup_strategy == "anchor_first":
-        from .dedup import anchor_first_near_dup_drops
-
-        # the scale strategy (r10): verify volume linear in bucket size
-        # on dup-heavy corpora, drop set PROVABLY equal to the clique
-        # path below (equality pinned in test_curate). The default
-        # stays "clique" — its algebra is what the graded q_curate
-        # oracle replays, and at small scale the two-round DAG is pure
-        # extra latency.
-        near_drops = pin(
-            anchor_first_near_dup_drops(
-                survivors,
-                id_col,
-                text_col,
-                threshold=near_dup_jaccard,
-                sh=sh,
-            )
-        )
-    else:
-        pairs = lsh_candidate_pairs(
-            minhash_signatures(survivors, id_col, text_col, sh=sh), id_col
-        )
-        verified = ngram_jaccard(
-            survivors, pairs, id_col, text_col, sh=sh
-        ).filter(
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            >= near_dup_jaccard
-        )
+    verified = ngram_jaccard(
+        survivors, pairs, id_col, text_col, sh=sh
+    ).filter(
+        F.col("n_inter")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+        >= near_dup_jaccard
+    )
     if transitive:
         from .components import connected_components
 
@@ -320,7 +268,7 @@ def curate_corpus(
         near_drops = comp.filter(F.col("node") != F.col("component")).select(
             F.col("node").alias("_drop_id")
         )
-    elif near_dup_strategy == "clique":
+    else:
         # pinned so the LSH+Jaccard verify chain runs once even when the
         # CALLER materializes the returned frame repeatedly (keep-set,
         # rejection report, write — the normal usage); sh/pairs are

@@ -89,39 +89,6 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     return sh
 
 
-def shingle_hashes(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sh64) pairs: ``hash64`` of each DISTINCT word-3-gram — the
-    NARROW form of :func:`shingles` for pinned/shared frames (r11).
-
-    Every shared consumer of a shingle frame (minhash's ``% M31``
-    reduction, the Jaccard verify's ``collect_set``) reads ONLY
-    ``hash64(shingle)``, never the string — so a frame that is
-    materialized once and read several times (curate_corpus,
-    anchor_first_near_dup_drops, q_ngram_jaccard) should store the
-    8-byte hash, not the ~25-60-byte 3-gram text: same downstream
-    values bit-for-bit (the hash is applied to the identical distinct
-    strings, just earlier), at a fraction of the checkpoint write/read
-    and scan bytes (guide §2.3: narrower types / shuffle keys, not
-    payloads). Distinctness is still decided on the STRINGS inside
-    :func:`shingles` (array_distinct before explode), so the oracle's
-    list_distinct-then-hash algebra is replayed exactly even if two
-    grams of one document were ever to collide."""
-    return shingles(df, id_col, text_col).select(
-        F.col(id_col), hash64(F.col("shingle")).alias("sh64")
-    )
-
-
-def _sh64_col(sh: DataFrame):
-    """The 60-bit gram hash of a shared shingle frame, whichever form
-    it arrives in: pre-hashed (``sh64`` — :func:`shingle_hashes`) or
-    raw 3-gram strings (``shingle`` — :func:`shingles`)."""
-    return (
-        F.col("sh64") if "sh64" in sh.columns else hash64(F.col("shingle"))
-    )
-
-
 def exact_duplicates(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -161,16 +128,15 @@ def minhash_signatures(
     computed once, not K times.
 
     ``sh`` lets a composed pipeline (operators/curate.py) pass ONE
-    (cached) shingle frame shared with the Jaccard verify step — the
-    shingle build is the dominant text-side cost and would otherwise
-    run twice. Either form is accepted: raw 3-gram strings
-    (:func:`shingles`) or the narrow pre-hashed ``sh64`` layout
-    (:func:`shingle_hashes`) — identical signatures by construction
-    (the same hash64 is applied either way).
+    (cached) :func:`shingles` frame shared with the Jaccard verify
+    step — the shingle build is the dominant text-side cost and would
+    otherwise run twice.
     """
     if sh is None:
         sh = shingles(df, id_col, text_col)
-    hashed = sh.select(id_col, (_sh64_col(sh) % MERSENNE31).alias("h31"))
+    hashed = sh.select(
+        id_col, (hash64(F.col("shingle")) % MERSENNE31).alias("h31")
+    )
     # expr strings (one parse per component) — the per-k Column chains
     # cost ~0.15 s of py4j plan construction per call (r5)
     aggs = [
@@ -297,144 +263,6 @@ def lsh_candidate_pairs(
     )
 
 
-def anchor_first_near_dup_drops(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    threshold: float = 0.8,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    sh: DataFrame | None = None,
-) -> DataFrame:
-    """GREEDY near-dup drop ids — ``(_drop_id)`` rows, by construction
-    the SAME set as verifying :func:`lsh_candidate_pairs`'s clique
-    pairs and dropping the larger id of each confirmed pair — at a
-    verify volume that is linear in bucket size on duplicate-heavy
-    corpora instead of quadratic (r10; the superlinear term of the
-    composed curation flow at scale).
-
-    Why the clique is quadratic below the cap: a bucket of n members
-    emits C(n, 2) pairs, and every pair ships both docs' shingle sets
-    through the verify join — a 100-replica boilerplate family is
-    ~4.7k pairs ALL of which confirm against the family minimum. At
-    the e2e smoke's 100× replica mix that is 23M pairs / ~7 GB of
-    verify shuffle for a drop set the star already determines.
-
-    Two phases, ONE lazy DAG (phase 2's pair generation joins phase
-    1's drop frame back into the buckets — no driver sync):
-
-    1. verify the STAR of every bucket — (min id, member), Σ(|B|−1)
-       pairs. A member whose Jaccard vs its bucket anchor reaches the
-       threshold is dropped, exactly as the clique would drop it
-       (anchor < member).
-    2. only RESIDUE members (in no bucket confirmed vs the anchor, so
-       phase 1 alone cannot decide them) are paired with every
-       smaller-id co-member except the anchor (that pair is phase-1
-       known-failed). In a uniform duplicate family the residue is
-       EMPTY; in the worst case (nothing confirms) this degenerates to
-       the clique minus the star — never more total pairs than
-       clique + star.
-
-    Equivalence proof (drop-set equality, per bucket B with anchor m):
-    a member b is clique-dropped iff ∃ a∈B, a<b, J(a,b) ≥ t. If
-    J(m,b) ≥ t, phase 1 drops b (m < b always). Otherwise b is
-    residue in B and phase 2 checks exactly {a∈B : a < b, a ≠ m} —
-    together with the known-failed (m,b) that is the identical
-    condition. Union over buckets on both sides → equal sets. The
-    equality needs no collision or rounding assumption; it is pinned
-    against the clique path on replica mixes, random-overlap corpora
-    and capped buckets (tests/test_curate.py).
-
-    The cap semantics match the clique path's: an oversized bucket
-    (> ``max_bucket``) contributes its star only (phase 2 skips it) —
-    the same bounded-fanout trade :func:`lsh_candidate_pairs`
-    documents. This operator serves the composed curation flow
-    (curate_corpus ``near_dup_strategy="anchor_first"``); the graded
-    q_curate / q_lsh_candidates keep the clique algebra their DuckDB
-    oracles replay. NOT for transitive mode: the confirmed EDGE SET
-    is thinner than the clique's (a phase-1-dropped member's edges to
-    later members are never verified), so connected components could
-    split a cluster the clique keeps whole; only the greedy drop set
-    is equivalent."""
-    if sh is None:
-        sh = pin(shingle_hashes(df, id_col, text_col))
-    bands = signature_bands(
-        minhash_signatures(df, id_col, text_col, sh=sh), id_col
-    )
-    # one bucket frame feeds the star emit AND the phase-2 regroup
-    grouped = pin(
-        bands.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    star = F.expr(
-        "transform(slice(ids, 2, size(ids) - 1), "
-        "b -> struct(element_at(ids, 1) AS id_a, b AS id_b))"
-    )
-    p1 = (
-        grouped.select(F.explode(star).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    is_dup = (
-        F.col("n_inter")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        >= threshold
-    )
-    drops1 = pin(
-        ngram_jaccard(df, p1, id_col, text_col, sh=sh)
-        .filter(is_dup)
-        .select(F.col("id_b").alias("_drop_id"))
-        .distinct()
-    )
-    # phase 2: re-expand ONLY undecided members. Marking happens on the
-    # exploded (bucket, id) rows — the bucket arrays never carry text,
-    # and the join key is the id, so the drop frame (duplicate-sized)
-    # broadcasts under AQE.
-    exploded = grouped.select(
-        "band", "band_key", F.explode("ids").alias(id_col)
-    )
-    marked = exploded.join(
-        drops1.select(
-            F.col("_drop_id").alias(id_col), F.lit(True).alias("_c")
-        ),
-        id_col,
-        "left",
-    )
-    g2 = (
-        marked.groupBy("band", "band_key")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("i"),
-                        F.coalesce("_c", F.lit(False)).alias("c"),
-                    )
-                )
-            ).alias("m")
-        )
-    )
-    if max_bucket is not None:
-        g2 = g2.filter(F.size("m") <= max_bucket)
-    residue = F.expr(
-        "flatten(transform(m, (b, j) -> CASE "
-        "WHEN b.c OR j < 2 THEN array() "
-        "ELSE transform(slice(m, 2, j - 1), "
-        "a -> struct(a.i AS id_a, b.i AS id_b)) END))"
-    )
-    p2 = (
-        g2.select(F.explode(residue).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    drops2 = (
-        ngram_jaccard(df, p2, id_col, text_col, sh=sh)
-        .filter(is_dup)
-        .select(F.col("id_b").alias("_drop_id"))
-    )
-    return drops1.union(drops2).distinct()
-
-
 def lsh_bucket_stats(
     signatures: DataFrame,
     id_col: str = "doc_id",
@@ -482,8 +310,8 @@ def ngram_jaccard(
     shuffle). Candidate restriction comes first either way: the
     semi-join keeps every downstream operator candidate-sized.
 
-    ``sh`` accepts an ALREADY-PINNED shingle frame from the caller
-    (shared with minhash in the composed pipeline); ``pairs`` is
+    ``sh`` accepts an ALREADY-PINNED :func:`shingles` frame from the
+    caller (shared with minhash in the composed pipeline); ``pairs`` is
     pinned here — it is usually the OUTPUT OF THE LSH BAND JOIN, which
     plan-audited uncached re-ran once per reference.
 
@@ -493,9 +321,7 @@ def ngram_jaccard(
     """
     pairs = pin(pairs)
     if sh is None:
-        # the narrow layout: both reads of the pin below touch only the
-        # gram hash, so store 8-byte longs, not 3-gram strings (r11)
-        sh = pin(shingle_hashes(df, id_col, text_col))
+        sh = pin(shingles(df, id_col, text_col))
     # Restrict to candidate-doc shingles first: the candidate id set is
     # tiny (LSH output), so the semi-join broadcasts and every
     # downstream join/aggregate touches candidate shingles only. No
@@ -515,7 +341,7 @@ def ngram_jaccard(
     sets = (
         sh.join(pair_ids, id_col, "left_semi")
         .groupBy(id_col)
-        .agg(F.collect_set(_sh64_col(sh)).alias("_set"))
+        .agg(F.collect_set(hash64(F.col("shingle"))).alias("_set"))
     )
     a = sets.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
     b = sets.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))

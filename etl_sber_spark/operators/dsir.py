@@ -28,8 +28,9 @@ per-row arithmetic, so the whole method is relational:
   the repo-wide no-RNG rule.
 
 Determinism / differential testability: per-gram log-ratio terms are
-rounded to 9 decimals and summed as DECIMAL(28,9) — exact and
-order-independent (the BM25/LM rule, operators/lm.py) — so a DuckDB
+rounded to 9 decimals and summed exactly in decimal — per folded
+bucket, n·term as DECIMAL(12,0)×DECIMAL(16,9) = DECIMAL(29,9) —
+order-independent (the BM25/LM rule, operators/lm.py), so a DuckDB
 oracle replays the arithmetic bit-identically (q_dsir_weights).
 
 Scale: gram explosion is the dominant cost (linear in corpus tokens,
@@ -127,7 +128,8 @@ def importance_weights(
     document with at least one gram; higher = more target-like.
     ``log_weight`` = Σ_grams round(log2 p̂_target(b) − log2 p̂_raw(b), 9)
     with add-1 smoothed p̂(b) = (c_b + 1) / (total + n_buckets), summed
-    exactly in DECIMAL(28,9) and emitted as a 6-decimal double.
+    exactly as per-bucket DECIMAL(29,9) terms and emitted as a
+    6-decimal double.
 
     Shape (r12, guide §2.3 "aggregate before you shuffle"): the gram
     stream is folded to ``(doc, bucket, n)`` rows — at most

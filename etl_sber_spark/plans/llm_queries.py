@@ -254,9 +254,8 @@ def q_ngram_jaccard(spark, sf_dir):
     2.31 / unshared 2.29 s min-of-3 same-session at sf0.1) — hashing
     before the checkpoint serializes the md5 into the pin-write stage,
     while the per-consumer hash64 runs inside stages this
-    scheduling-bound query overlaps anyway. The narrow layout remains
-    the right call where checkpoint BYTES dominate (the 100×/1000×
-    curate spine keeps it — operators/curate.py anchor_first path)."""
+    scheduling-bound query overlaps anyway. Raw strings are the only
+    shingle layout the dedup operators take."""
     d = load_table(spark, sf_dir, "documents")
     sh = pin(dd.shingles(d))
     pairs = dd.lsh_candidate_pairs(dd.minhash_signatures(d, sh=sh))
@@ -597,8 +596,10 @@ def q_dsir_weights(spark, sf_dir):
     the target is a small high-quality corpus). Two bucket-count
     aggregates train the model; scoring is explode → broadcast-join the
     256-row log-ratio table → one aggregate. Per-gram terms are rounded
-    to 9 decimals and summed as DECIMAL(28,9) (exact, order-independent)
-    so the oracle replays the full arithmetic bit-identically —
+    to 9 decimals and summed exactly — the operator per folded bucket
+    as DECIMAL(29,9) n·term products, the oracle per gram as
+    DECIMAL(28,9); the same rational number, order-independent — so
+    the oracle replays the full arithmetic bit-identically —
     including the engine-side log2 discipline of operators/lm.py."""
     from ..operators.dsir import importance_weights
 

@@ -833,12 +833,17 @@ def q_self_rejoin(spark, sf_dir):
     """J8: derived keys inner-rejoined to the base table to re-attach
     attributes (main.py:473-474 — derived (client_id, event_dt) ⋈ view).
     Here: each user's latest timestamp rejoined to recover the event
-    row(s) at that instant."""
-    e = load_table(spark, sf_dir, "events")
-    keys = e.groupBy("user_id").agg(F.max("ts").alias("last_ts"))
+    row(s) at that instant. Both sides are aliased so the join
+    condition names two distinct relations (``keys`` is derived from
+    ``e``, so unqualified references would resolve to one attribute)."""
+    e = load_table(spark, sf_dir, "events").alias("e")
+    keys = e.groupBy("user_id").agg(F.max("ts").alias("last_ts")).alias("k")
     return keys.join(
-        e, (keys.user_id == e.user_id) & (keys.last_ts == e.ts), "inner"
-    ).select(keys.user_id, "last_ts", "event_id", "event_type")
+        e,
+        (F.col("k.user_id") == F.col("e.user_id"))
+        & (F.col("k.last_ts") == F.col("e.ts")),
+        "inner",
+    ).select("k.user_id", "k.last_ts", "e.event_id", "e.event_type")
 
 
 @query(

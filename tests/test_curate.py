@@ -7,12 +7,25 @@ deterministic verdict set.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import functions as F
 
 from etl_sber_spark.operators.curate import curate_corpus
+from etl_sber_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET,
+    MERSENNE31,
+    MINHASH_PERMS,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    ngram_jaccard,
+    shingles,
+)
 from etl_sber_spark.sources.tables import load_table
 
 from .conftest import SF_SMALL
+from .test_skew_caps import _py_lsh_pairs
 
 EN = (
     "the quick brown fox jumps over the lazy dog and keeps running through "
@@ -316,19 +329,6 @@ def test_semantic_stage_empty_and_min_id(spark):
     assert out2[2] is None and out2[3] == "semantic_dup"
 
 
-def test_unmaterialized_annotations_identical(spark):
-    """materialize_annotations=False (the 100 TB storage knob: skip the
-    corpus-sized eager checkpoint, recompute the deterministic
-    annotation regexes per consumer) must be output-identical to the
-    default."""
-    d = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    a = sorted(map(tuple, curate_corpus(d).collect()))
-    b = sorted(
-        map(tuple, curate_corpus(d, materialize_annotations=False).collect())
-    )
-    assert a == b
-
-
 def _semantic_fixture(spark):
     """Docs where {2,3} are the semantic pair (same direction, lexically
     distinct), 4 is an exact lexical dup of 2, 5 has no embedding."""
@@ -515,11 +515,81 @@ def test_serving_semantic_stage_on_fixture_corpus(spark):
     assert n_sem > 0, "stage was vacuous on the fixture"
 
 
-def test_anchor_first_identical_on_replica_mix(spark):
-    """near_dup_strategy='anchor_first' (r10): drop-set equality with
-    the clique path on the e2e replica mix (exact copies + suffix
-    near-dups + prefix variants — uniform dup families, the shape
-    where the residue is empty and the verify volume collapses)."""
+# ---------------------------------------------------------------------------
+# Near-dup stage vs a pure-Python model: LSH pairs from the real
+# signatures (test_skew_caps._py_lsh_pairs), exact 3-gram Jaccard over
+# Python sets, drop the larger id of every confirmed pair.
+# ---------------------------------------------------------------------------
+
+#: Java's ``\s`` — the class ``dedup.tokens_expr`` splits on
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _py_shingles(text: str) -> set[str]:
+    """``dedup.shingles`` in Python: trim spaces, lowercase, split on
+    whitespace runs, distinct word-3-grams (none under 3 tokens)."""
+    toks = _JAVA_WS.split(text.strip(" ").lower())
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+
+def _py_minhash(grams: set[str]) -> tuple[int, ...]:
+    """``dedup.minhash_signatures`` for one document: hash64 (md5 of
+    ``gram + ':0'``, first 15 hex digits) mod 2^31-1, then the min of
+    every affine permutation."""
+    h31 = [
+        int(hashlib.md5(f"{g}:0".encode()).hexdigest()[:15], 16) % MERSENNE31
+        for g in grams
+    ]
+    return tuple(
+        min((a * h + b) % MERSENNE31 for h in h31) for a, b in MINHASH_PERMS
+    )
+
+
+def _py_near_dup_drops(spark, rows, threshold, max_bucket=DEFAULT_MAX_BUCKET):
+    """The greedy clique drop set of ``rows`` [(doc_id, text)]."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = [r.asDict() for r in minhash_signatures(docs).collect()]
+    grams = {i: _py_shingles(t) for i, t in rows}
+    return {
+        b
+        for a, b, _ in _py_lsh_pairs(sigs, max_bucket)
+        if len(grams[a] & grams[b]) / len(grams[a] | grams[b]) >= threshold
+    }
+
+
+def _assert_curate_matches_model(spark, docs, threshold=0.8, **kw):
+    """curate_corpus's near_dup set equals the model run over the
+    documents that reached the near-dup stage (kept or near_dup)."""
+    out = curate_corpus(docs, near_dup_jaccard=threshold, **kw).collect()
+    staged = [
+        (r.doc_id, r.text) for r in out if r.drop_reason in (None, "near_dup")
+    ]
+    got = {r.doc_id for r in out if r.drop_reason == "near_dup"}
+    want = _py_near_dup_drops(spark, staged, threshold)
+    assert got == want
+    assert want  # the stage actually fired
+
+
+def _operator_drops(docs, threshold, max_bucket):
+    """The near-dup chain curate_corpus runs, at an explicit cap."""
+    pairs = lsh_candidate_pairs(
+        minhash_signatures(docs), max_bucket=max_bucket
+    )
+    return {
+        r.id_b
+        for r in ngram_jaccard(docs, pairs)
+        .filter(
+            F.col("n_inter")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+            >= threshold
+        )
+        .collect()
+    }
+
+
+def test_near_dup_matches_python_model_on_replica_mix(spark):
+    """The e2e replica mix (exact copies + suffix near-dups + prefix
+    variants — uniform duplicate families) at 8×."""
     d = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     factor = 8
     docs = (
@@ -544,24 +614,13 @@ def test_anchor_first_identical_on_replica_mix(spark):
         )
         .localCheckpoint()
     )
-    a = sorted(
-        (r.doc_id, r.drop_reason) for r in curate_corpus(docs).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.drop_reason)
-        for r in curate_corpus(
-            docs, near_dup_strategy="anchor_first"
-        ).collect()
-    )
-    assert a == b
-    assert any(r == "near_dup" for _, r in a)  # the stage actually fired
+    _assert_curate_matches_model(spark, docs)
 
 
-def test_anchor_first_identical_on_partial_overlap(spark):
-    """Drop-set equality where buckets are MIXED: overlapping token
-    windows put docs in shared LSH buckets while pairwise Jaccard
-    straddles the threshold, so phase 2's residue path (member-member
-    pairs the anchor cannot decide) is actually exercised."""
+def test_near_dup_matches_python_model_on_partial_overlap(spark):
+    """MIXED buckets: overlapping token windows put docs in shared LSH
+    buckets while pairwise Jaccard straddles the threshold, so members
+    are confirmed against co-members other than the bucket minimum."""
     words = [f"w{i}" for i in range(400)]
     rows = []
     did = 0
@@ -572,34 +631,15 @@ def test_anchor_first_identical_on_partial_overlap(spark):
             rows.append((did, " ".join(words[start:start + 60])))
             did += 1
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        (r.doc_id, r.drop_reason)
-        for r in curate_corpus(
-            docs, min_quality=0.0, allowed_langs=("en", "und")
-        ).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.drop_reason)
-        for r in curate_corpus(
-            docs, min_quality=0.0, allowed_langs=("en", "und"),
-            near_dup_strategy="anchor_first",
-        ).collect()
-    )
-    assert a == b
-    assert any(r == "near_dup" for _, r in a)
-
-
-def test_anchor_first_operator_matches_clique_under_cap(spark):
-    """Operator-level equality with a TINY max_bucket, so the
-    oversized-bucket star semantics (phase 2 skipped) are compared
-    against the clique path's own star fallback."""
-    from etl_sber_spark.operators.dedup import (
-        anchor_first_near_dup_drops,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard,
+    _assert_curate_matches_model(
+        spark, docs, min_quality=0.0, allowed_langs=("en", "und")
     )
 
+
+def test_near_dup_matches_python_model_under_cap(spark):
+    """A TINY max_bucket (oversized buckets emit the min-id star) and
+    the default cap: the operator chain equals the model at both, and
+    curate_corpus (default cap) equals it too."""
     words = [f"t{i}" for i in range(200)]
     rows = [
         (i, " ".join(words[s:s + 50]))
@@ -607,53 +647,18 @@ def test_anchor_first_operator_matches_clique_under_cap(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for cap in (3, 1000):
-        pairs = lsh_candidate_pairs(
-            minhash_signatures(docs), max_bucket=cap
-        )
-        clique_drops = {
-            r.id_b
-            for r in ngram_jaccard(docs, pairs)
-            .filter(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-                >= 0.8
-            )
-            .collect()
-        }
-        af = {
-            r._drop_id
-            for r in anchor_first_near_dup_drops(
-                docs, max_bucket=cap
-            ).collect()
-        }
-        assert af == clique_drops, cap
-
-
-def test_anchor_first_refuses_transitive_and_bad_strategy(spark):
-    import pytest
-
-    docs = spark.createDataFrame([(1, EN)], "doc_id long, text string")
-    with pytest.raises(ValueError, match="transitive"):
-        curate_corpus(
-            docs, transitive=True, near_dup_strategy="anchor_first"
-        )
-    with pytest.raises(ValueError, match="near_dup_strategy"):
-        curate_corpus(docs, near_dup_strategy="starfish")
-
-
-def test_anchor_first_operator_random_differential(spark):
-    """Seeded random corpora (LCG, no RNG state): documents sample
-    overlapping token pools so pairwise Jaccard lands all over the
-    threshold and LSH buckets mix families — the drop set must equal
-    the clique path's on every corpus (the docstring proof's
-    empirical backstop)."""
-    from etl_sber_spark.operators.dedup import (
-        anchor_first_near_dup_drops,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard,
+        want = _py_near_dup_drops(spark, rows, 0.8, cap)
+        assert _operator_drops(docs, 0.8, cap) == want, cap
+        assert want, cap
+    _assert_curate_matches_model(
+        spark, docs, min_quality=0.0, allowed_langs=("en", "und")
     )
 
+
+def test_near_dup_matches_python_model_on_lcg_corpora(spark):
+    """Seeded random corpora (LCG, no RNG state) at threshold 0.5:
+    documents sample overlapping token pools so pairwise Jaccard lands
+    all over the threshold and LSH buckets mix families."""
     for seed in (1, 2, 3):
         rows = []
         state = seed
@@ -667,50 +672,30 @@ def test_anchor_first_operator_random_differential(spark):
                 toks.append(f"p{pool}t{(s2 % 40) + pool * 25}")
             rows.append((i, " ".join(toks)))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        pairs = lsh_candidate_pairs(minhash_signatures(docs))
-        clique_drops = {
-            r.id_b
-            for r in ngram_jaccard(docs, pairs)
-            .filter(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-                >= 0.5
-            )
-            .collect()
-        }
-        af = {
-            r._drop_id
-            for r in anchor_first_near_dup_drops(
-                docs, threshold=0.5
-            ).collect()
-        }
-        assert af == clique_drops, seed
-        assert clique_drops, seed  # vacuous equality would prove nothing
+        _assert_curate_matches_model(
+            spark, docs, threshold=0.5, min_quality=0.0,
+            allowed_langs=("en", "und"),
+        )
 
 
-def test_shingle_hashes_form_is_value_identical(spark):
-    """The narrow pre-hashed shingle layout (dedup.shingle_hashes, the
-    r11 pinned-frame default) must produce BIT-IDENTICAL downstream
-    values to the raw string layout at every consumer: minhash
-    signatures, the Jaccard verify, and the anchor-first drop set —
-    the hash64 is applied to the same distinct strings either way,
-    just before materialization instead of after."""
-    from etl_sber_spark.operators import dedup as dd
-
+def test_signatures_and_jaccard_match_python_model(spark):
+    """The raw-string shingle layout's consumers on the fixture
+    corpus: every minhash signature and every verified pair's
+    (n_inter, n_a, n_b) equal the pure-Python evaluation."""
     d = load_table(spark, SF_SMALL, "documents")
-    sh_str = dd.shingles(d)
-    sh_h = dd.shingle_hashes(d)
+    grams = {r.doc_id: _py_shingles(r.text) for r in d.collect()}
 
-    sig_a = dd.minhash_signatures(d, sh=sh_str).orderBy("doc_id").collect()
-    sig_b = dd.minhash_signatures(d, sh=sh_h).orderBy("doc_id").collect()
-    assert sig_a == sig_b
+    sh = shingles(d)
+    sigs = minhash_signatures(d, sh=sh).collect()
+    mh = [f"mh{k:02d}" for k in range(len(MINHASH_PERMS))]
+    assert {r.doc_id: tuple(r[c] for c in mh) for r in sigs} == {
+        i: _py_minhash(g) for i, g in grams.items() if g
+    }
 
-    pairs = dd.lsh_candidate_pairs(dd.minhash_signatures(d, sh=sh_h))
-    cols = ["id_a", "id_b", "n_inter", "n_a", "n_b"]
-    ja = dd.ngram_jaccard(d, pairs, sh=sh_str).orderBy(cols).collect()
-    jb = dd.ngram_jaccard(d, pairs, sh=sh_h).orderBy(cols).collect()
-    assert ja == jb and len(ja) > 0
-
-    da = dd.anchor_first_near_dup_drops(d, sh=sh_str).collect()
-    db = dd.anchor_first_near_dup_drops(d, sh=sh_h).collect()
-    assert sorted(r._drop_id for r in da) == sorted(r._drop_id for r in db)
+    pairs = lsh_candidate_pairs(minhash_signatures(d, sh=sh))
+    got = sorted(map(tuple, ngram_jaccard(d, pairs, sh=sh).collect()))
+    want = sorted(
+        (a, b, len(grams[a] & grams[b]), len(grams[a]), len(grams[b]))
+        for a, b in {(r.id_a, r.id_b) for r in pairs.collect()}
+    )
+    assert got == want and len(got) > 0

@@ -202,7 +202,6 @@ def main() -> None:
             emb_id_col="doc_id",
             semantic_centroids=cents,
             semantic_threshold=0.99,
-            near_dup_strategy="anchor_first",
         ).localCheckpoint()
         if curated is not None:
             funnel = {
@@ -228,7 +227,9 @@ def main() -> None:
             token_count,
         )
         from etl_sber_spark.operators.dedup import (
-            anchor_first_near_dup_drops,
+            lsh_candidate_pairs,
+            minhash_signatures,
+            ngram_jaccard,
             shingles,
         )
         from etl_sber_spark.operators.semdedup import semdedup_serving
@@ -317,10 +318,24 @@ def main() -> None:
             ),
         )
         near_drops = step(
-            "anchor_verify",
-            lambda: anchor_first_near_dup_drops(
-                survivors, "doc_id", "text", threshold=0.8, sh=sh
-            ).localCheckpoint(eager=True),
+            "clique_verify",
+            lambda: ngram_jaccard(
+                survivors,
+                lsh_candidate_pairs(
+                    minhash_signatures(survivors, "doc_id", "text", sh=sh)
+                ),
+                "doc_id",
+                "text",
+                sh=sh,
+            )
+            .filter(
+                F.col("n_inter")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+                >= 0.8
+            )
+            .select(F.col("id_b").alias("_drop_id"))
+            .distinct()
+            .localCheckpoint(eager=True),
         )
         lex_ids = survivors.join(
             near_drops,
@@ -390,7 +405,6 @@ def main() -> None:
             emb_id_col="doc_id",
             semantic_centroids=cents,
             semantic_threshold=0.99,
-            near_dup_strategy="anchor_first",
         ).localCheckpoint()
         curated2.groupBy("drop_reason").count().collect()
         out["curate2_sec"] = round(time.perf_counter() - t0, 2)

@@ -341,12 +341,6 @@ def main() -> None:
                 emb_id_col="doc_id",
                 semantic_centroids=cents,
                 semantic_threshold=0.99,
-                # r10: the anchor-first near-dup strategy — drop set
-                # provably equal to the clique default (pinned in
-                # test_curate), verify volume linear in bucket size on
-                # this dup-heavy mix (direct A/B at 100×: 70.0 → 37.5 s
-                # curate wall, 6.4 → 0.8 GB shuffle)
-                near_dup_strategy="anchor_first",
             ).localCheckpoint()
             curated_holder["df"] = curated
             return {
