@@ -189,8 +189,13 @@ def importance_weights(
         # one union-aggregate, not a per-side count + full-outer join:
         # buckets seen only in the target still contribute to t_total,
         # and a full-outer join of the two count frames would be the
-        # plan's only SortMergeJoin (full outer cannot broadcast)
-        counts = (
+        # plan's only SortMergeJoin (full outer cannot broadcast).
+        # Pinned: ``counts`` feeds both ``totals`` and ``ratio``, and
+        # exchange reuse does not merge the two copies (an inferred
+        # isnotnull(bucket) filter lands on one side only), so unpinned
+        # the target's tokenize + hash + count pass and this aggregate
+        # ran twice per action
+        counts = pin(
             db.select(
                 "bucket",
                 F.col("_n").alias("_r"),

@@ -23,6 +23,14 @@ This module is that maintenance loop:
   retained documents, keeping every future increment's dedup basis
   current.
 
+One increment computes each intermediate once: the gated documents are
+shingled once (the shingles feed both the signatures and the exact
+verify), and the frames several consumers read — shingles, signatures,
+the index verdicts, the in-batch drops and the returned keepers — are
+pinned, so appending the keepers to the signature index, to the band
+layout and joining them to embeddings re-reads neither the increment's
+source nor the annotation joins.
+
 Scale: the index side is signatures only; the bands join shuffles on
 hash-uniform (band, band_key); the estimator join touches candidate
 pairs only. Nothing ever re-reads corpus text. Determinism: same
@@ -40,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64
+from ..session import shuffle_width
 from .dedup import (
     DEFAULT_MAX_BUCKET,
     MINHASH_PERMS,
@@ -47,6 +56,7 @@ from .dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard,
+    shingles,
     signature_bands,
 )
 from .materialize import pin
@@ -90,10 +100,6 @@ def estimated_jaccard(new_sigs: DataFrame, old_sigs: DataFrame,
 #: Catalog-table name of the materialized band layout
 #: (:func:`save_band_index`).
 BAND_INDEX_TABLE = "sig_band_index"
-
-#: Bucket fanout of the band layout. Fixed for the table's lifetime —
-#: appends must match the spec (Spark refuses a mismatched bucketBy).
-BAND_INDEX_BUCKETS = 64
 
 
 def hashed_bands(
@@ -143,7 +149,7 @@ def save_band_index(
     wh,
     index_sigs: DataFrame,
     name: str = BAND_INDEX_TABLE,
-    n_buckets: int = BAND_INDEX_BUCKETS,
+    n_buckets: int | None = None,
     id_col: str = "doc_id",
 ) -> None:
     """Materialize the signature index's band rows — (id, bk), the
@@ -164,6 +170,19 @@ def save_band_index(
       for that query: Spark's DisableUnnecessaryBucketedScan rule
       un-buckets a joinless scan, silently forfeiting the prune
       (verified live; pinned in the test).
+
+    ``n_buckets`` defaults to the session's shuffle width
+    (:func:`~etl_sber_spark.session.shuffle_width`: the largest of
+    ``defaultParallelism``, ``spark.sql.shuffle.partitions`` and AQE's
+    ``initialPartitionNum``, which the scan width ratchet raises from
+    input bytes). Every probe scans the layout twice — the thinning
+    guard's size count and the join — with one task per bucket each,
+    and every append writes up to one file per bucket, so buckets
+    beyond the session's width add tasks and files, not parallelism.
+    The count is chosen when the table is created:
+    :func:`append_band_index` inherits it from the catalog, so a
+    rebuild on the maintenance cadence is what re-sizes it. An
+    explicit ``n_buckets`` wins.
 
     What a static layout canNOT give here, stated plainly: band keys
     are hash-uniform by construction, so a normal increment's probe
@@ -190,6 +209,8 @@ def save_band_index(
     tiny files whose per-file open overhead at read time eats the
     win. Repartitioning by the bucket key first (same Murmur3 pmod as
     bucketBy) gives one file per bucket per write."""
+    if n_buckets is None:
+        n_buckets = shuffle_width(wh.spark)
     wh.save_bucketed(
         hashed_bands(index_sigs, id_col).repartition(n_buckets, "bk"),
         name,
@@ -207,8 +228,11 @@ def append_band_index(
     """Append an increment's keeper band rows to the band layout —
     the per-increment half of :func:`save_band_index`'s lockstep
     contract (call with :func:`curate_increment`'s
-    ``new_index_rows``). The bucket spec is pinned by the existing
-    table: Spark refuses an append whose bucketing differs. Increments
+    ``new_index_rows``). The bucket spec is the existing table's, set
+    when :func:`save_band_index` created it (the session's shuffle
+    width unless given): Spark refuses an append whose bucketing
+    differs, and a later session with a different width still appends
+    with the table's count. Increments
     are small (keeper-sized), so ONE write partition keeps the append
     to one file per touched bucket instead of tasks × buckets (see
     :func:`save_band_index` on why file count is the layout's real
@@ -379,8 +403,10 @@ def curate_increment(
       survivor, the in-batch pipeline's semantics);
     - ``new_index_rows``: the keepers' signatures, ready to APPEND to
       the index table — after which the next increment dedupes against
-      the grown corpus. Weights come from ``load_classifier`` — the
-      versioned artifact records which classifier gated each crawl.
+      the grown corpus. It is pinned: the signature-index append, the
+      band-layout append and an embedding join each read it without
+      re-running the increment. Weights come from ``load_classifier`` —
+      the versioned artifact records which classifier gated each crawl.
 
     ``bucket_sizes`` passes a precomputed :func:`band_bucket_sizes`
     snapshot through to the index check — the 100 TB maintenance knob
@@ -393,6 +419,10 @@ def curate_increment(
     lockstep contract: append ``new_index_rows``'s bands via
     :func:`append_band_index` alongside the sig append.
     """
+    # Pins, each for a frame with more than one consumer. Unpinned,
+    # every consumer re-plans the whole subtree — re-reading the
+    # increment's source (a JSONL scan, in the nightly) and re-running
+    # the joins above it.
     cls_drops = None
     if classifier_weights is not None:
         from .classifier import hashed_token_features, quality_scores
@@ -410,13 +440,16 @@ def curate_increment(
         gated = new_docs.join(cls_drops, id_col, "left_anti")
     else:
         gated = new_docs
-    sigs = pin(minhash_signatures(gated, id_col, text_col))
-    # pinned: duplicate-sized, but its SUBTREE is the index-bands join +
-    # estimator — and it feeds three consumers (batch_docs/batch_sigs
-    # anti-joins and the final annotation join). The normal caller
-    # (streaming/corpus.py) additionally materializes BOTH returned
-    # frames per micro-batch; unpinned, the dominant new-vs-index join
-    # re-ran once per action (review finding).
+    # shingles: the text-side cost, read by the signatures and by the
+    # exact verify (semi-joined there on the pair ids, so the superset
+    # over all gated docs is exact)
+    sh = pin(shingles(gated, id_col, text_col))
+    # signatures: the index check, the in-batch LSH and the keepers
+    sigs = pin(minhash_signatures(gated, id_col, text_col, sh=sh))
+    # index verdicts: duplicate-sized, but the subtree is the
+    # index-bands join + estimator, and they feed the in-batch
+    # anti-join, the annotation join and (through batch_sigs) the
+    # keepers
     vs_index = pin(
         near_dup_vs_index(
             sigs, index_sigs, est_threshold, id_col,
@@ -429,16 +462,15 @@ def curate_increment(
 
     # in-batch near-dups among docs that SURVIVED the index check —
     # exact verification (text is at hand for both sides of each pair)
-    batch_docs = gated.join(vs_index, id_col, "left_anti")
     batch_sigs = sigs.join(vs_index, id_col, "left_anti")
     pairs = lsh_candidate_pairs(batch_sigs, id_col)
-    verified = ngram_jaccard(batch_docs, pairs, id_col, text_col).filter(
+    verified = ngram_jaccard(gated, pairs, id_col, text_col, sh=sh).filter(
         F.col("n_inter")
         / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
         >= exact_threshold
     )
-    # pinned for the same reason: the LSH + n-gram verify chain must run
-    # once, not once per materialization of annotated/keeper_sigs
+    # in-batch drops: the LSH + n-gram verify chain runs once, not once
+    # per consumer (the annotation join and the keepers)
     batch_drops = pin(
         verified.select(F.col("id_b").alias(id_col)).distinct()
     )
@@ -459,9 +491,11 @@ def curate_increment(
         *new_docs.columns,
         F.coalesce(*arms).alias("drop_reason"),
     )
-    keeper_sigs = sigs.join(
-        annotated.filter(F.col("drop_reason").isNotNull()).select(id_col),
-        id_col,
-        "left_anti",
-    )
+    # keepers: the signatures with no drop reason. Classifier drops
+    # never reach ``sigs``, so the pinned frames give the same ids as
+    # anti-joining ``annotated``'s drops, without re-running the
+    # annotation joins over ``new_docs``. Pinned for its consumers:
+    # the signature-index append, the band-layout append and the
+    # embedding join
+    keeper_sigs = pin(batch_sigs.join(batch_drops, id_col, "left_anti"))
     return annotated, keeper_sigs

@@ -185,8 +185,18 @@ def maybe_widen_partitions(spark: SparkSession, input_bytes: int) -> int:
     if os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS"):
         return 0  # explicit sizing wins
     width = derived_width(input_bytes)
-    if width <= 0:
+    if width <= 0 or width <= shuffle_width(spark):
         return 0
+    spark.conf.set(_WIDEN_CONF, str(width))
+    return width
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The width the session's shuffles start at: the largest of
+    ``defaultParallelism``, ``spark.sql.shuffle.partitions`` and AQE's
+    ``initialPartitionNum`` (which :func:`maybe_widen_partitions`
+    raises from input bytes). The ratchet's floor, and the bucket count
+    of layouts sized to the session (operators/incremental.py)."""
 
     def _int_conf(key: str) -> int:
         # no fallback arg: RuntimeConfig.get VALIDATES a fallback string
@@ -197,15 +207,11 @@ def maybe_widen_partitions(spark: SparkSession, input_bytes: int) -> int:
         except Exception:
             return 0
 
-    floor = max(
+    return max(
         spark.sparkContext.defaultParallelism,
         _int_conf("spark.sql.shuffle.partitions"),
         _int_conf(_WIDEN_CONF),
     )
-    if width <= floor:
-        return 0
-    spark.conf.set(_WIDEN_CONF, str(width))
-    return width
 
 
 #: Inferred scan schemas kept per session (LRU): far above the distinct

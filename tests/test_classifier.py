@@ -201,6 +201,8 @@ def test_classifier_gate_in_increment(spark, trained):
     from etl_sber_spark.operators.incremental import curate_increment
     from etl_sber_spark.streaming.corpus import empty_index
 
+    from .test_incremental import assert_keepers_are_unflagged_signed_docs
+
     _, _, w = trained
     good = "measured insight careful analysis evidence source v9"
     docs = spark.createDataFrame(
@@ -219,6 +221,7 @@ def test_classifier_gate_in_increment(spark, trained):
     assert rows[2] == "batch_near_dup"
     assert rows[3] == "classifier"
     assert [r.doc_id for r in keepers.collect()] == [1]
+    assert_keepers_are_unflagged_signed_docs(annotated, keepers, docs)
 
 
 def test_classifier_gate_in_corpus_stream(spark, trained, tmp_path):

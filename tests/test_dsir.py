@@ -177,3 +177,16 @@ def test_importance_weights_scoring_join_is_broadcast(corpus):
     plan = w._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_general_path_counts_target_grams_once(corpus):
+    """The bucket counts feed both the totals and the log-ratio table.
+    Exchange reuse does not merge the two copies (an inferred isnotnull
+    filter lands on one side only), so the counts are pinned: the
+    executed plan re-plans no gram explode — the corpus's pass sits
+    behind its pin, the target's behind the counts pin."""
+    target = corpus.filter(F.col("lang") == "en")
+    w = importance_weights(corpus, target, n_buckets=B)
+    w.collect()
+    plan = w._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan

@@ -42,6 +42,26 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def assert_keepers_are_unflagged_signed_docs(
+    annotated, keepers, new_docs, id_col="doc_id", text_col="text"
+):
+    """The keepers are exactly the new documents with no drop reason
+    that have a signature (documents under three tokens have none)."""
+    unflagged = {
+        r[id_col]
+        for r in annotated.filter("drop_reason IS NULL").select(id_col).collect()
+    }
+    signed = {
+        r[id_col]
+        for r in minhash_signatures(new_docs, id_col, text_col)
+        .select(id_col)
+        .collect()
+    }
+    got = [r[id_col] for r in keepers.select(id_col).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == unflagged & signed
+
+
 def test_curate_increment_respects_id_col(spark):
     """id_col threads through the whole increment path (a hard-coded
     'doc_id' inside near_dup_vs_index/estimated_jaccard was a round-3
@@ -58,6 +78,9 @@ def test_curate_increment_respects_id_col(spark):
     reasons = {r.my_id: r.drop_reason for r in annotated.collect()}
     assert reasons == {201: "index_near_dup", 202: None}
     assert [r.my_id for r in keepers.collect()] == [202]
+    assert_keepers_are_unflagged_signed_docs(
+        annotated, keepers, day2, "my_id", "body"
+    )
 
 
 def test_near_dup_vs_index_finds_planted_dup(spark):
@@ -106,6 +129,7 @@ def test_curate_increment_grows_index_and_next_round_sees_it(spark, tmp_path):
     assert got[10] == "index_near_dup"
     assert got[11] is None
     assert got[12] == "batch_near_dup"  # exact in-batch gate, min-id wins
+    assert_keepers_are_unflagged_signed_docs(ann2, keep2, day2)
     wh.append(keep2, idx)
 
     # increment 3: a near-dup of increment-2's KEEPER is caught via the
@@ -114,6 +138,7 @@ def test_curate_increment_grows_index_and_next_round_sees_it(spark, tmp_path):
     ann3, keep3 = curate_increment(day3, wh.read(idx))
     assert ann3.collect()[0].drop_reason == "index_near_dup"
     assert keep3.count() == 0
+    assert_keepers_are_unflagged_signed_docs(ann3, keep3, day3)
     # the index holds exactly the keepers: 1, 2, 11
     assert {r.doc_id for r in wh.read(idx).collect()} == {1, 2, 11}
 
@@ -233,6 +258,9 @@ def test_band_index_layout_verdicts_identical(spark, tmp_path):
         inline, _ = reasons()
         banded, keep = reasons(index_bands=bands)
         assert banded == inline
+        assert {r.doc_id for r in keep.collect()} == {
+            d for d, why in banded.items() if why is None
+        }
         assert banded == {
             10: "index_near_dup",
             11: None,
@@ -439,3 +467,104 @@ def test_r9_era_bucket_sizes_snapshot_rekeyed(spark):
     assert a == b
     n_900 = sum(1 for n, _ in a if n == 900)
     assert 0 < n_900 <= 4 * cap  # hot bucket still capped
+
+
+def test_keepers_pinned_for_their_consumers(spark, tmp_path):
+    """The returned keepers feed three consumers in the nightly (the
+    signature-index append, the band-layout append and the embedding
+    join). On a JSONL increment, a second materialization must read the
+    pin: at most one Spark job, and no JSON file scan in its executed
+    plan (unpinned, each consumer re-read the JSONL and re-ran the
+    annotation joins). The keeper ids stay the unflagged documents
+    with a signature — doc 13 is under three tokens and has none."""
+    import json
+
+    from etl_sber_spark.sources.corpus import read_documents_jsonl
+
+    from .conftest import jobs_started
+
+    index = minhash_signatures(_docs(spark, [(1, BASE), (2, UNRELATED)]))
+    path = tmp_path / "increment.jsonl"
+    rows = [
+        (10, BASE.replace("dawn", "dusk")),  # near-dup of indexed 1
+        (11, BASE2),  # keeper
+        (12, BASE2.replace("racks", "nodes")),  # in-batch dup of 11
+        (13, "too short"),  # no signature
+        (14, UNRELATED.replace("gardening", "cooking") + " " + BASE2[:40]),
+    ]
+    path.write_text(
+        "".join(json.dumps({"doc_id": d, "text": t}) + "\n" for d, t in rows)
+    )
+    good, _ = read_documents_jsonl(spark, str(path))
+    annotated, keepers = curate_increment(good, index)
+
+    first = sorted(r.doc_id for r in keepers.collect())
+    # a new plan over the keepers, like each consumer builds (re-running
+    # the same frame would reuse its finished shuffle stages instead)
+    second, jobs = jobs_started(
+        spark, lambda: keepers.select("doc_id").collect()
+    )
+    assert sorted(r.doc_id for r in second) == first
+    assert jobs <= 1
+    plan = keepers._jdf.queryExecution().executedPlan().toString()
+    assert "json" not in plan.lower()
+
+    reasons = {r.doc_id: r.drop_reason for r in annotated.collect()}
+    assert reasons[10] == "index_near_dup"
+    assert reasons[12] == "batch_near_dup"
+    assert reasons[13] is None
+    assert 13 not in first and 11 in first
+    assert_keepers_are_unflagged_signed_docs(annotated, keepers, good)
+
+
+def test_band_index_width_follows_session(spark, tmp_path):
+    """save_band_index without n_buckets sizes the layout to the
+    session's shuffle width (the largest of defaultParallelism,
+    shuffle.partitions and AQE's initialPartitionNum; 4 on a 4-core
+    session), and append_band_index keeps the table's count even when
+    the session has widened since."""
+    import uuid
+
+    from etl_sber_spark.operators.incremental import (
+        append_band_index,
+        save_band_index,
+    )
+
+    init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+    def conf_int(key):
+        try:
+            return int(spark.conf.get(key))
+        except Exception:
+            return 0
+
+    def num_buckets(tbl):
+        desc = {
+            r.col_name: r.data_type
+            for r in spark.sql(f"DESCRIBE EXTENDED {tbl}").collect()
+        }
+        return int(desc["Num Buckets"])
+
+    width = max(
+        spark.sparkContext.defaultParallelism,
+        conf_int("spark.sql.shuffle.partitions"),
+        conf_int(init_key),
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    tbl = f"band_idx_{uuid.uuid4().hex[:8]}"
+    index = minhash_signatures(_docs(spark, [(1, BASE), (2, UNRELATED)]))
+    new = minhash_signatures(_docs(spark, [(11, BASE2)]))
+    prev = spark.conf.get(init_key, None)
+    try:
+        save_band_index(wh, index, name=tbl)
+        assert num_buckets(tbl) == width
+        spark.conf.set(init_key, str(width + 3))
+        append_band_index(wh, new, name=tbl)
+        assert num_buckets(tbl) == width
+        assert {r.doc_id for r in spark.table(tbl).collect()} == {1, 2, 11}
+    finally:
+        if prev is None:
+            spark.conf.unset(init_key)
+        else:
+            spark.conf.set(init_key, prev)
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
