@@ -25,23 +25,21 @@ Layout
                  (brute-force / hyperplane-LSH / IVF, float or int8
                  IVF,SQ8), int8 embedding quantization, multimodal
                  column plumbing, salted aggregation, data-quality
-                 gates, bigram-LM surprisal scoring, deterministic
-                 sampling / splits / per-stratum caps, token-budget
-                 mixture building, sequence chunking+packing, BM25
-                 ranking, PII redaction, benchmark decontamination,
-                 sessionization, incremental rollup maintenance
+                 gates, supervised quality classifier, DSIR importance
+                 weighting, deterministic sampling / splits /
+                 per-stratum caps, sequence chunking+packing, BM25
+                 ranking, PII redaction, sessionization, time-series
+                 resampling with gap filling
 - ``sinks``      parquet warehouse: partitioned append, atomic versioned
                  overwrite-swap (SCD2 rewrite), dynamic partition
-                 overwrite, compaction, bucketed tables; sharded JSONL
-                 corpus export with trainer manifest
+                 overwrite, bucketed tables; sharded JSONL corpus export
+                 with trainer manifest
 - ``plans``      end-to-end dataflows: denormalized data view, fraud rules,
                  and the driver-facing query registry
 - ``pipeline``   run_day orchestration (inbox -> warehouse -> mart)
-- ``streaming``  AvailableNow inbox (file + record exactly-once),
-                 watermarked rollups, stateful running totals and
-                 velocity alerts, continuous SCD2, live band-join
-                 (fraud rule 3), session windows, JSONL corpus landing
-                 zone with incremental curation
+- ``streaming``  idempotent foreachBatch landing zones: JSONL corpus with
+                 incremental curation, crawl ingestion against a
+                 persisted URL index, ANN serving-table maintenance
 
 Reference parity is documented per-function with ``main.py:<line>`` cites
 into /root/reference (study-only; no code copied — the reference is Oracle

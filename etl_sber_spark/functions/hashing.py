@@ -19,7 +19,7 @@ md5 path remains the tested contract because the DuckDB oracles replay
 it literally. The swap changes every hash VALUE, so it is only safe on
 a fresh deployment: persisted hash-derived state (the minhash
 signature index, hash-stable sample/split membership, export shard
-assignment, mixture epoch fates) must be rebuilt, or prior decisions
+assignment) must be rebuilt, or prior decisions
 silently stop matching.
 """
 

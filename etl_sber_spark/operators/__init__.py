@@ -2,23 +2,22 @@
 
 Reference-parity: SCD maintenance (scd), band joins (bandjoin), as-of /
 range joins (asof, rangejoin), skew handling (skew), data-quality gates
-(quality), incremental rollup maintenance (rollup_maintenance).
+(quality).
 
-LLM training-data pipeline: text dedup (dedup, substr_dedup),
-batched model inference (inference), embedding similarity + semantic
-dedup (similarity, quantize, semdedup) and its persisted-index
-increment (semindex), versioned ANN index artifacts — build-at-ingest
-vs search-only (annindex), dedup clustering + soft weights (components),
-curation and its incremental/crawl front-ends (curate, incremental,
-crawl), crawl-authority ranking (pagerank),
-decontamination + leakage-guarded splits (decontam), sampling/splits
-(sampling), chunking/packing/materialization (packing), FIM transform
-(fim), ranking (ranking), tokenizers (bpe, vocab), LM quality gate
-(lm), supervised quality classifier (classifier), mixture building
-(mixture), sessionization (sessionize),
-reporting (datacard), multimodal plumbing (multimodal).
+LLM training-data pipeline: text dedup (dedup), batched model inference
+(inference), embedding similarity + semantic dedup (similarity,
+quantize, semdedup) and its persisted-index increment (semindex),
+versioned ANN index artifacts — build-at-ingest vs search-only
+(annindex), dedup clustering + soft weights (components), curation and
+its incremental/crawl front-ends (curate, incremental, crawl),
+crawl-authority ranking (pagerank), supervised quality classifier
+(classifier), DSIR importance weighting (dsir), sampling/splits
+(sampling), chunking/packing (packing), ranking (ranking), multimodal
+plumbing (multimodal).
 
-Shared infrastructure: materialize.pin (lazy localCheckpoint),
-spread (compute-bound fan-out past byte-based split planning),
-zorder (Morton-curve multi-column clustering for data skipping).
+Event analytics: sessionization (sessionize), resampling with gap
+filling (timeseries).
+
+Shared infrastructure: materialize.pin (localCheckpoint-backed reuse),
+spread (compute-bound fan-out past byte-based split planning).
 """

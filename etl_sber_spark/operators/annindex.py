@@ -1,9 +1,8 @@
 """Persisted ANN index artifacts: build at ingest, search per query.
 
 At 100 TB the similarity index is NOT rebuilt per query — it is built
-once per corpus snapshot and served read-only, exactly like the BPE
-merge table (operators/bpe.py save_merges/load_merges). This module
-makes that the paved path for both ANN families in
+once per corpus snapshot and served read-only. This module makes that
+the paved path for both ANN families in
 operators/similarity.py:
 
 - **IVF**: the trained k-means centroid table (metadata-scale:
@@ -107,7 +106,7 @@ def save_ivf_index(
     metadata: dict | None = None,
 ) -> None:
     """Persist trained IVF centroids as a versioned warehouse artifact
-    (atomic CURRENT flip + time travel, like the BPE merge table): a
+    (atomic CURRENT flip + time travel, like the classifier weights): a
     retrain writes v_{n+1} and readers mid-flight keep their version,
     and "which quantizer produced this corpus snapshot's cluster ids"
     is answerable by version diff. The table is metadata-scale
@@ -451,8 +450,8 @@ def cluster_serving_table(
     files, and can never observe a new layout paired with a stale
     watermark (r6 ADVICE). Refuses when the serving columns predate a
     retrain (:func:`bind_serving` stamp mismatch). Run on the warehouse
-    maintenance cadence alongside ``Warehouse.compact_partition``;
-    returns the output table name (default ``{serving_table}_by_list``).
+    maintenance cadence; returns the output table name (default
+    ``{serving_table}_by_list``).
     """
     _check_binding(wh, serving_table, ivf_name, lsh_name, context="compact")
     out = out_table or f"{serving_table}_by_list"
@@ -582,31 +581,6 @@ def _sample(df: DataFrame, id_col: str, sample_mod: int) -> DataFrame:
     if sample_mod <= 1:
         return df
     return df.filter(hash64(F.col(id_col).cast("string")) % sample_mod == 0)
-
-
-def _mean_assign_dist(
-    embeddings: DataFrame,
-    cent_rows,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    sample_mod: int = STATUS_SAMPLE_MOD,
-) -> float | None:
-    """Mean nearest-centroid distance (original vector space) over the
-    deterministic hash sample — ONE aggregate over a literal-matrix
-    projection, the same shape as assignment itself."""
-    from .similarity import nearest_centroid_dist_expr
-
-    row = (
-        _sample(spread(embeddings), id_col, sample_mod)
-        .agg(
-            F.avg(
-                nearest_centroid_dist_expr(quantize_vec_sql(vec_col), cent_rows)
-            ).alias("m")
-        )
-        .first()
-    )
-    return float(row.m) if row.m is not None else None
 
 
 #: Probe parameters stamped at build and replayed by ann_status — the

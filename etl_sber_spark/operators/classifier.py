@@ -2,8 +2,8 @@
 filter (GPT-3/LLaMA-style: label a small reference set "high quality"
 vs "random crawl", train a linear classifier on cheap text features,
 score every document, threshold or importance-sample on the score).
-The fastText-shaped counterpart to the UNsupervised surprisal gate in
-operators/lm.py; both feed curation as per-document score columns.
+The fastText-shaped quality signal; it feeds curation as a
+per-document score column.
 
 Everything is DataFrame algebra — no ML runtime:
 
@@ -24,7 +24,7 @@ Everything is DataFrame algebra — no ML runtime:
   rows against literal weights: at 100 TB this is the production path
   (train once on the labeled sample, score the corpus in one pass).
 - :func:`save_classifier` / :func:`load_classifier` — the weight
-  vector persists as a VERSIONED warehouse artifact (the BPE/annindex
+  vector persists as a VERSIONED warehouse artifact (the annindex
   pattern): curation runs record exactly which classifier version
   gated them.
 
@@ -200,8 +200,7 @@ def evaluate_classifier(
     Shape: one id-equi-join, one global rank window, one aggregate —
     runs on the labeled HOLD-OUT (thousands of rows at any corpus
     scale), never the corpus. The window is a single global sort of
-    that hold-out; do not point this at corpus-sized input (score
-    distributions over the corpus belong to operators/profile.py).
+    that hold-out; do not point this at corpus-sized input.
     All ratios are exact-count divisions rounded to 6 — deterministic
     across partitionings (differential vs a pure-Python replay in
     tests/test_classifier.py).
@@ -501,8 +500,7 @@ def sigmoid(x: float) -> float:
 
 def save_classifier(wh, weights: list[float], name: str = "quality_classifier") -> None:
     """Persist the weight vector as a versioned warehouse artifact
-    (atomic flip + time travel, like the BPE merge table and the ANN
-    centroid index)."""
+    (atomic flip + time travel, like the ANN centroid index)."""
     rows = [(b, float(w)) for b, w in enumerate(weights)]
     wh.overwrite_versioned(
         wh.spark.createDataFrame(rows, "bucket int, weight double"), name

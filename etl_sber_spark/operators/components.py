@@ -204,7 +204,7 @@ def soft_dedup_weights(
     by the inverse of its duplicate-cluster size, so a passage's total
     training influence is constant no matter how many near-copies the
     crawl found. The down-weighting alternative to hard removal —
-    sampling-based pipelines feed ``sample_weight`` into the mixture /
+    sampling-based pipelines feed ``sample_weight`` into the sampler /
     loss instead of discarding text.
 
     Output: ``df``'s columns + ``cluster_id`` + ``cluster_size`` +

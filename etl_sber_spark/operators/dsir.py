@@ -30,7 +30,7 @@ per-row arithmetic, so the whole method is relational:
 Determinism / differential testability: per-gram log-ratio terms are
 rounded to 9 decimals and summed exactly in decimal — per folded
 bucket, n·term as DECIMAL(12,0)×DECIMAL(16,9) = DECIMAL(29,9) —
-order-independent (the BM25/LM rule, operators/lm.py), so a DuckDB
+order-independent (the BM25 rule, operators/ranking.py), so a DuckDB
 oracle replays the arithmetic bit-identically (q_dsir_weights).
 
 Scale: gram explosion is the dominant cost (linear in corpus tokens,
@@ -39,8 +39,8 @@ same order as the dedup shingle build); the model itself is two
 the driver beyond the bucket counts.
 
 Reference parity: no selection surface in the reference (bank ETL);
-extends the quality stack (functions/text.py heuristics, operators/lm.py
-surprisal) with the distribution-matching signal.
+extends the quality stack (functions/text.py heuristics,
+operators/classifier.py scores) with the distribution-matching signal.
 """
 
 from __future__ import annotations

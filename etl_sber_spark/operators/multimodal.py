@@ -21,7 +21,6 @@ parallelizes with the scan. Partition by content-defined key (e.g.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -141,16 +140,6 @@ def auto_decoder():
         )
 
     return decode
-
-
-def _stub_dims(payload: bytes) -> tuple[int, int, int, str]:
-    """Deterministic fake (width, height, n_frames, md5hex) from payload
-    bytes — stable across engines/runs, so tests can be differential."""
-    h = hashlib.md5(payload or b"").hexdigest()
-    width = int(h[:4], 16) % 1920 + 1
-    height = int(h[4:8], 16) % 1080 + 1
-    n_frames = int(h[8:12], 16) % 300 + 1
-    return width, height, n_frames, h
 
 
 def decode_features(

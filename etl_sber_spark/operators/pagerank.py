@@ -16,9 +16,9 @@ Shape per iteration (the classic Spark formulation, one shuffle each):
   collected driver-side and folded back as a literal — the
   k-means-centroid pattern (metadata scale, one row);
 - new rank = (1−d)/n + d·dangling/n + d·contrib;
-- each iteration's rank frame is pinned (lazy localCheckpoint): it
-  feeds the dangling sum AND the next iteration's join, and pinning
-  truncates the iterative lineage (the k-means/BPE loop discipline).
+- each iteration's rank frame is pinned (materialize.pin): it feeds
+  the dangling sum AND the next iteration's join, and pinning
+  truncates the iterative lineage (the k-means loop discipline).
 
 Determinism (the repo-wide differential rule): double summation is
 partition-order dependent, so ranks live as LONG units of 10⁻¹²

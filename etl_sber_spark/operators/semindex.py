@@ -31,7 +31,7 @@ quantizer serves IVF search and this index) and must stay FIXED across
 increments — the index stores
 cluster ids, so retraining invalidates the index (same contract as
 hashing.py's xxhash64 note). Drift between the frozen quantizer and new
-data shows up as cluster imbalance, which the datacard/profiler surface.
+data shows up as cluster imbalance.
 
 Similarity convention: all-integer quantized cosine
 (quantize.cosine_q_expr — exact BIGINT dot products, one IEEE division),

@@ -2,35 +2,26 @@
 
 Groups a user's events into sessions separated by inactivity gaps —
 the standard unit of web/product analytics and the canonical
-"stateful" operator every engine is asked for. Two independent
-formulations, cross-checked in tests/test_sessionize.py:
+"stateful" operator every engine is asked for.
 
-- :func:`sessionize` — window algebra: lag → gap flag → running sum.
-  Emits one row PER EVENT with its session id (what downstream
-  per-event feature pipelines join on). One shuffle (the per-user
-  window sort).
-- :func:`session_stats` — per-session aggregate rows via Spark's
-  native ``F.session_window`` (merging-interval aggregation). In
-  BATCH it computes the same sessions as the window formulation;
-  in STREAMING the identical expression runs incrementally with
-  watermark-evicted state (streaming/sessions.py) — one definition,
-  both execution modes, which is the Structured-Streaming design
-  argument for using session_window over hand-rolled state.
+:func:`sessionize` uses window algebra: lag → gap flag → running sum.
+It emits one row PER EVENT with its session id (what downstream
+per-event feature pipelines join on), in one shuffle (the per-user
+window sort). tests/test_sessionize.py checks it against hand fixtures
+and against the same algebra in DuckDB SQL; ``q_sessionize`` is graded
+against its oracle.
 
 Session identity: ``session_id = user × 2^32 + seq`` (seq is the
 0-based per-user session ordinal) — deterministic, collision-free for
 user ids < 2^31 (the fixture range), and cheap (no string concat in
 the hot path).
 
-Scale: both shapes shuffle once on the user key; per-user data is
-bounded (events/user, not corpus-sized), so the window sort never
-spills pathologically; AQE skew handling covers hot users. No UDFs,
-no state bigger than the watermark horizon in streaming mode.
+Scale: one shuffle on the user key; per-user data is bounded
+(events/user, not corpus-sized), so the window sort never spills
+pathologically; AQE skew handling covers hot users. No UDFs.
 
 Reference parity: the reference has no sessionization (nightly bank
-batch); extension surface. Same gap semantics as the trailing-window
-velocity operator (streaming/rollup.py velocity_alerts) but partitioned
-into disjoint sessions rather than a sliding horizon.
+batch); extension surface.
 """
 
 from __future__ import annotations
@@ -54,8 +45,8 @@ def sessionize(
     + ``session_id``. An event starts a new session iff it is the
     user's first or follows the previous event by MORE than
     ``gap_minutes`` (a gap of exactly ``gap_minutes`` continues the
-    session — the closed-interval convention ``session_window`` uses,
-    so the two formulations agree on boundary events).
+    session — the closed-interval convention of Spark's
+    ``session_window``).
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
     gap_us = F.lit(gap_minutes * 60 * 1_000_000)
@@ -72,42 +63,4 @@ def sessionize(
     return df.withColumn("session_seq", seq).withColumn(
         "session_id",
         F.col(user_col).cast("long") * F.lit(2**32) + F.col("session_seq"),
-    )
-
-
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = DEFAULT_GAP_MIN,
-) -> DataFrame:
-    """One row per session via native ``session_window`` merging.
-
-    Output: ``user_col``, ``session_start``, ``session_end`` (last
-    event time; session_window's ``end`` is last-event + gap, so the
-    aggregate carries max(ts) explicitly), ``n_events``,
-    ``duration_us``. Works unchanged on a streaming DataFrame
-    (add a watermark first — see streaming/sessions.py).
-    """
-    gap = f"{gap_minutes} minutes"
-    return (
-        df.groupBy(
-            F.col(user_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(
-            user_col,
-            "session_start",
-            "session_end",
-            "n_events",
-            (
-                F.unix_micros(F.col("session_end"))
-                - F.unix_micros(F.col("session_start"))
-            ).alias("duration_us"),
-        )
     )

@@ -373,12 +373,11 @@ def run_backfill(
     printed warning + the file QUARANTINED to ``<inbox>/Rejected/`` —
     leaving it in the scanned inbox would only defer the corruption to
     the next cron tick, which would apply it at a newer processing_ts;
-    ADVICE round 4) — the exact high-water-mark rule the continuous
-    SCD2 stream applies (streaming/scd.py). Pure re-deliveries lose nothing (re-applying
-    at the tail is the replay no-op anyway); a genuinely different
-    mid-history dimension snapshot cannot be retrofitted — that is a
-    rebuild-from-snapshots operation, deliberately not a backfill
-    flag. Fact/mart days have no such constraint (partition
+    ADVICE round 4) — a high-water-mark rule. Pure re-deliveries lose
+    nothing (re-applying at the tail is the replay no-op anyway); a
+    genuinely different mid-history dimension snapshot cannot be
+    retrofitted — that is a rebuild-from-snapshots operation,
+    deliberately not a backfill flag. Fact/mart days have no such constraint (partition
     overwrites are order-free) and still process.
 
     A day in the range with NO matching files yields ``(day, None)``

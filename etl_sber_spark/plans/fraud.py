@@ -56,8 +56,6 @@ def data_view(
     processing_ts: dt.datetime,
     *,
     faithful_full_history: bool = False,
-    prune_partitions: bool = True,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """The denormalized transaction view (main.py:392-421).
 
@@ -79,18 +77,17 @@ def data_view(
     both filters are kept, so even a hand-written violating row changes
     nothing relative to the reference's create_date-only filter within
     its own partition. Rows that VIOLATE the invariant (hand-backfilled
-    or late-loaded under a different load_date) would be excluded that
-    the reference's create_date-only filter includes — a backfill flow
-    that intentionally writes such rows passes
-    ``prune_partitions=False`` to fall back to the faithful data-column
-    filter over all partitions (r7 ADVICE: documented edge, opt-out
-    gated). Dims (clients/accounts/cards/terminals)
-    broadcast when small, degrade to shuffle equi-joins when not. The
-    only big-side shuffle key is ``card_num``.
+    or late-loaded under a different load_date) are excluded, where the
+    reference's create_date-only filter would include them.
+
+    All four dim joins (cards, accounts, clients, terminals) carry a
+    ``F.broadcast`` hint: the hint is unconditional, honored regardless
+    of size, and right for the reference's bank dims (thousands of
+    rows). The only big-side shuffle key is ``card_num``.
     """
     day = F.lit(processing_ts.date()).cast("date")
     fact_today = fact_transactions.filter(F.to_date("create_date") == day)
-    if prune_partitions and "load_date" in fact_transactions.columns:
+    if "load_date" in fact_transactions.columns:
         fact_today = fact_today.filter(F.col("load_date") == day)
 
     trm = (
@@ -99,53 +96,22 @@ def data_view(
         else scd2_current(terminals_hist, processing_ts)
     ).select("terminal_id", "terminal_type", "terminal_city")
 
-    return enrich_transactions(
-        fact_today, trm, clients, accounts, cards,
-        broadcast_dims=broadcast_dims,
-    )
-
-
-def enrich_transactions(
-    transactions: DataFrame,
-    trm: DataFrame,
-    clients: DataFrame,
-    accounts: DataFrame,
-    cards: DataFrame,
-    *,
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """The denormalization join chain shared by the nightly
-    :func:`data_view` and the live stream (streaming/mart.py) — ONE
-    definition, so the batch and streaming enrichments cannot drift.
-    ``trm`` arrives pre-filtered/projected (as-of semantics are the
-    caller's: the nightly view pins ``processing_ts``, the stream uses
-    the dim version current at each micro-batch).
-
-    ``broadcast_dims=True`` (default) HINTS all four dim joins:
-    ``F.broadcast`` is unconditional, honored regardless of size, and
-    right for the reference's bank dims (thousands of rows). A
-    deployment whose dims outgrow executor memory passes ``False`` —
-    the joins then degrade per AQE/statistics to shuffle equi-joins
-    instead of dying on a broadcast OOM (r8 review: data_view's
-    "degrade when not small" promise previously had no way to happen
-    through the forced hints)."""
-    hint = F.broadcast if broadcast_dims else (lambda df: df)
     return (
-        transactions.alias("trs")
+        fact_today.alias("trs")
         .join(
-            hint(cards.alias("crd")),
+            F.broadcast(cards.alias("crd")),
             F.trim(F.col("crd.card_num")) == F.col("trs.card_num"),
         )
         .join(
-            hint(accounts.alias("acc")),
+            F.broadcast(accounts.alias("acc")),
             F.col("acc.account") == F.col("crd.account"),
         )
         .join(
-            hint(clients.alias("cl")),
+            F.broadcast(clients.alias("cl")),
             F.col("cl.client_id") == F.col("acc.client"),
         )
         .join(
-            hint(trm.alias("trm")),
+            F.broadcast(trm.alias("trm")),
             F.col("trs.terminal") == F.col("trm.terminal_id"),
         )
         .select(

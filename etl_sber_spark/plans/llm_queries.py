@@ -599,8 +599,7 @@ def q_dsir_weights(spark, sf_dir):
     to 9 decimals and summed exactly — the operator per folded bucket
     as DECIMAL(29,9) n·term products, the oracle per gram as
     DECIMAL(28,9); the same rational number, order-independent — so
-    the oracle replays the full arithmetic bit-identically —
-    including the engine-side log2 discipline of operators/lm.py."""
+    the oracle replays the full arithmetic bit-identically."""
     from ..operators.dsir import importance_weights
 
     d = load_table(spark, sf_dir, "documents")

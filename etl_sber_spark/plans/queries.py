@@ -966,11 +966,7 @@ def q_sessionize(spark, sf_dir):
     """Gap-based sessionization (operators/sessionize.py): every event
     assigned its user's session (30-minute inactivity gap) via
     lag → new-session flag → running sum — ONE shuffle (the per-user
-    window). The oracle replays the identical window algebra; the
-    native session_window formulation (and its streaming twin) is
-    proven equal to this one in tests/test_sessionize.py /
-    test_streaming_sessions.py, so hash-grading this row pins all
-    three."""
+    window). The oracle replays the identical window algebra."""
     from ..operators.sessionize import sessionize
 
     e = load_table(spark, sf_dir, "events")

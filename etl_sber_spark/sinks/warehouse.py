@@ -121,8 +121,8 @@ class Warehouse:
         union schema is computed across all footers (one extra
         footer-reading pass — cost scales with file count, which is
         why it is opt-in, matching Spark's own default) and pre-widening
-        rows surface as NULLs — the convention every quality gate and
-        profiler column in this repo already treats as "absent".
+        rows surface as NULLs — the convention every quality gate in
+        this repo already treats as "absent".
         Dropping or retyping a column is NOT schema evolution and
         still fails the merge; that is a rewrite
         (:meth:`overwrite_versioned`), not an append.
@@ -260,32 +260,6 @@ class Warehouse:
             return False
         shutil.rmtree(d)
         return True
-
-    def compact_partition(
-        self,
-        name: str,
-        partition_col: str,
-        partition_value,
-        target_files: int = 4,
-    ) -> int:
-        """Small-file compaction for one partition: rewrite it into
-        ``target_files`` files via dynamic partition overwrite.
-
-        Daily appends accumulate one file set per micro-batch/run; at
-        100 TB the metadata and open-file overhead of thousands of tiny
-        files dominates scan setup — nightly compaction of closed
-        partitions is standard warehouse hygiene. Returns the partition
-        row count (sanity signal for the caller)."""
-        part = self.read(name).filter(F.col(partition_col) == partition_value)
-        n = part.count()
-        (
-            part.repartition(target_files)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(self._dir(name))
-        )
-        return n
 
     def save_bucketed(
         self,
@@ -510,10 +484,10 @@ class Warehouse:
 
 def warehouse_manifest(wh: Warehouse, *, count_rows: bool = True):
     """One-row-per-table snapshot manifest of a warehouse — the
-    reproducibility record a corpus/dataset release ships alongside its
-    datacard: for each table, its layout (``versioned`` swap /
-    ``partitioned`` / plain ``path``), the CURRENT version and retained
-    version count, file count, total bytes, and (optionally) row count.
+    reproducibility record a corpus/dataset release ships: for each
+    table, its layout (``versioned`` swap / ``partitioned`` / plain
+    ``path``), the CURRENT version and retained version count, file
+    count, total bytes, and (optionally) row count.
 
     Columns: ``table``, ``layout``, ``current_version`` (NULL for
     non-versioned), ``n_versions``, ``n_files``, ``n_bytes``,
@@ -524,9 +498,7 @@ def warehouse_manifest(wh: Warehouse, *, count_rows: bool = True):
     Scale: metadata-sized output (one row per table); the byte/file
     walk is driver-side filesystem listing — on object storage this is
     the same LIST the reader performs — and counts are parquet
-    metadata-only. Fingerprinting CONTENT (value hashes) is the
-    datacard/profiler's job (operators/datacard.py), not the
-    manifest's.
+    metadata-only. It does not fingerprint CONTENT (value hashes).
     """
     rows = []
     for name in sorted(os.listdir(wh.root)):

@@ -255,8 +255,7 @@ def file_date(path: str) -> dt.date | None:
 
 def quarantine_file(path: str) -> str:
     """Move a REJECTED input to <dir>/Rejected/<name> and return the new
-    path. The batch twin of the streaming SCD2 rejects table
-    (streaming/scd.py): a stale terminals snapshot left in the scanned
+    path. A stale terminals snapshot left in the scanned
     inbox would be re-applied by the next cron tick at a newer
     processing_ts — closing current SCD2 versions and resurrecting old
     attributes — so skipped files must leave the inbox, into a directory

@@ -1,1 +1,3 @@
-"""Structured Streaming variant of the file-inbox pipeline."""
+"""Structured Streaming landing zones: idempotent foreachBatch streams
+(idempotent) for the JSONL corpus (corpus), crawled pages (crawl) and
+the ANN serving table (vectors)."""

@@ -7,8 +7,7 @@ minhash signature index; annotated documents append to a curated table
 and keepers' signatures append to the index — so the next batch dedupes
 against the grown corpus, and the corpus text is never re-read.
 
-Same execution discipline as the continuous SCD2 stream
-(streaming/scd.py):
+Execution discipline (the shared harness, streaming/idempotent.py):
 
 - ``foreachBatch``: the increment is multi-output (curated rows + index
   rows + quarantine) and reads warehouse state (the index) — batch

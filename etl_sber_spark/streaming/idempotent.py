@@ -1,9 +1,9 @@
 """Shared harness for idempotent foreachBatch landing-zone streams.
 
-streaming/corpus.py and streaming/crawl.py run the same execution
-discipline — marker fast-skip, batch_id-partition OVERWRITE writes,
-marker written last — and previously each carried its own copy of the
-scaffolding (a review finding: a correctness fix applied to one stream
+streaming/corpus.py, streaming/crawl.py and streaming/vectors.py run
+the same execution discipline — marker fast-skip, batch_id-partition
+OVERWRITE writes, marker written last — and the first two previously
+each carried its own copy of the scaffolding (a review finding: a correctness fix applied to one stream
 could silently miss the other). This module is the single
 implementation:
 

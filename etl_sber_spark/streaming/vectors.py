@@ -147,7 +147,7 @@ def stream_vector_ingest(
         # limit-1 partial evaluation, so the write is this frame's only
         # full action — a checkpoint would add batch-sized IO without
         # removing any duplicate work (projections have no join to
-        # dedupe; contrast streaming/mart.py's pinned enrichment)
+        # dedupe)
         return {serving_table: out}
 
     return run_idempotent_increments(

@@ -22,11 +22,10 @@ def sf_dir():
     return SF_SMALL
 
 
-def parquet_col_ranges(path_glob: str, col: str, per: str = "file"):
-    """(min, max) spans of one column from real parquet footers — the
-    zone maps the reader prunes by. ``per='file'`` folds row groups to
-    one span per file; ``per='rowgroup'`` keeps them separate. Shared
-    by the clustering tests (test_warehouse_ops, test_zorder)."""
+def parquet_col_ranges(path_glob: str, col: str):
+    """(min, max) span of one column per parquet row group, from real
+    footers — the zone maps the reader prunes by. Used by the
+    clustering test (test_warehouse_ops)."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -34,19 +33,11 @@ def parquet_col_ranges(path_glob: str, col: str, per: str = "file"):
     out = []
     for f in sorted(_glob.glob(path_glob)):
         md = pq.ParquetFile(f).metadata
-        lo = hi = None
         for rg in range(md.num_row_groups):
             for i in range(md.row_group(rg).num_columns):
                 c = md.row_group(rg).column(i)
                 if c.path_in_schema == col:
-                    st = c.statistics
-                    if per == "rowgroup":
-                        out.append((st.min, st.max))
-                    else:
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-        if per == "file" and lo is not None:
-            out.append((lo, hi))
+                    out.append((c.statistics.min, c.statistics.max))
     return out
 
 

@@ -171,6 +171,10 @@ def test_daily_mart_prunes_fact_partitions(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "load_date" in m.group(1), plan
+    # the four dimension joins (cards, accounts, clients, terminals)
+    # stay broadcast-hinted
+    optimized = view._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("rightHint=(strategy=broadcast)") == 4, optimized
 
 
 def test_bm25_single_matched_exchange_two_corpus_passes(spark):

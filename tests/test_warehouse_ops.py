@@ -1,10 +1,9 @@
 """Warehouse maintenance + data-quality operators: idempotent day
-replay, partition compaction, DQ checks."""
+replay, DQ checks."""
 
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import shutil
 
 from pyspark.sql import functions as F
@@ -49,28 +48,6 @@ def test_idempotent_day_replay(spark, tmp_path):
     run_day(spark, _inbox(tmp_path, "b"), wh_root, bank, ts, idempotent=True)
     assert wh.read(T_FACT).count() == n1_fact == 15650
     assert wh.read(T_MART).count() == n1_mart > 0
-
-
-def test_compact_partition(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.range(0, 10_000).select(
-        F.col("id"),
-        (F.col("id") % 2).alias("part"),
-    )
-    # simulate many tiny appends
-    for _ in range(5):
-        wh.append(df.repartition(8), "t", partition_by=["part"])
-    files_before = len(
-        glob.glob(str(tmp_path / "wh" / "t" / "part=0" / "*.parquet"))
-    )
-    n = wh.compact_partition("t", "part", 0, target_files=2)
-    files_after = len(
-        glob.glob(str(tmp_path / "wh" / "t" / "part=0" / "*.parquet"))
-    )
-    assert n == 25_000  # 5 appends x 5k rows in partition 0
-    assert files_after == 2 < files_before
-    # other partition untouched, total rows preserved
-    assert wh.read("t").count() == 50_000
 
 
 def test_dq_checks(spark):
@@ -196,8 +173,7 @@ def test_clustered_append_tightens_zone_maps(spark, tmp_path):
 
     def spans(table):
         return parquet_col_ranges(
-            str(tmp_path / "wh" / table / "*.parquet"), "card",
-            per="rowgroup",
+            str(tmp_path / "wh" / table / "*.parquet"), "card"
         )
 
     def avg_span(sp):

@@ -15,8 +15,8 @@ micro-batches, so the deltas attribute the cost:
                read, isEmpty probe, dynamic-partition overwrite,
                marker write, per-batch trigger latency)
 
-Same deterministic vector generator as scale_smoke_streaming.py, so
-figures line up with the SCALE.md streaming table.
+Its deterministic vector generator matches the one behind SCALE.md's
+vector_ingest rows, so figures line up with that table.
 
 Usage: python tools/profile_vector_ingest.py [factor]   (default 100)
 """
@@ -58,8 +58,7 @@ def main() -> None:
 
     def write_single_file(df, staging: str, dest: str, fmt: str, **opts):
         # one top-level FILE per micro-batch (the file source counts
-        # files; maxFilesPerTrigger=1 then means one batch per file) —
-        # same helper as scale_smoke_streaming.py (nested there)
+        # files; maxFilesPerTrigger=1 then means one batch per file)
         w = df.coalesce(1).write.mode("overwrite")
         for k, v in opts.items():
             w = w.option(k, v)
