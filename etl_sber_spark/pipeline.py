@@ -377,8 +377,8 @@ def run_backfill(
     nothing (re-applying at the tail is the replay no-op anyway); a
     genuinely different mid-history dimension snapshot cannot be
     retrofitted — that is a rebuild-from-snapshots operation,
-    deliberately not a backfill flag. Fact/mart days have no such constraint (partition
-    overwrites are order-free) and still process.
+    deliberately not a backfill flag. Fact/mart days have no such
+    constraint (partition overwrites are order-free) and still process.
 
     A day in the range with NO matching files yields ``(day, None)``
     — surfaced, not skipped, so a typo'd range or a missing correction

@@ -2,10 +2,9 @@
 
 streaming/corpus.py, streaming/crawl.py and streaming/vectors.py run
 the same execution discipline — marker fast-skip, batch_id-partition
-OVERWRITE writes, marker written last — and the first two previously
-each carried its own copy of the scaffolding (a review finding: a correctness fix applied to one stream
-could silently miss the other). This module is the single
-implementation:
+OVERWRITE writes, marker written last. This module is its single
+implementation, so a correctness fix applied to one stream cannot
+silently miss another:
 
 - exactly-once per FILE via the stream checkpoint;
 - per-batch writes are idempotent BY CONSTRUCTION: every output table
