@@ -27,8 +27,10 @@ Layout
                  column plumbing, salted aggregation, data-quality
                  gates, supervised quality classifier, DSIR importance
                  weighting, deterministic sampling / splits /
-                 per-stratum caps, sequence chunking+packing, BM25
-                 ranking, PII redaction, sessionization, time-series
+                 per-stratum caps, exact-substring and line dedup, BPE
+                 tokenizer training, sequence chunking+packing, BM25
+                 ranking, PII redaction, benchmark decontamination +
+                 leakage-guarded splits, sessionization, time-series
                  resampling with gap filling
 - ``sinks``      parquet warehouse: partitioned append, atomic versioned
                  overwrite-swap (SCD2 rewrite), dynamic partition

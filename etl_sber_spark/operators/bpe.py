@@ -1,11 +1,9 @@
 """Distributed BPE tokenizer training (byte-pair encoding merges).
 
-The natural next step after :mod:`operators.vocab` (which picks a
-whole-word vocabulary): learn the *sub-word* merge table a production
-tokenizer ships with. The algorithm is the classic corpus BPE of
-Sennrich et al. 2016 ("Neural Machine Translation of Rare Words with
-Subword Units") — publicly documented; re-derived here as Spark column
-algebra.
+Learns the *sub-word* merge table a production tokenizer ships with.
+The algorithm is the classic corpus BPE of Sennrich et al. 2016
+("Neural Machine Translation of Rare Words with Subword Units") —
+publicly documented; re-derived here as Spark column algebra.
 
 Shapes (the 100 TB discipline):
 
@@ -19,7 +17,7 @@ Shapes (the 100 TB discipline):
   counts, weighted by word frequency) + a driver-side argmax of a single
   row (metadata scale) + a projection rewriting the symbol arrays. No
   joins, no corpus re-reads. The dictionary frame is re-pinned
-  (lazy localCheckpoint, operators/materialize.pin) every iteration so
+  (localCheckpoint, operators/materialize.pin) every iteration so
   the Lloyd-style lineage does not compound across iterations.
 - The merge *application* is a left-to-right fold over the symbol array
   (``F.aggregate``): greedy adjacent-pair replacement, exactly the
@@ -37,8 +35,7 @@ Shapes (the 100 TB discipline):
   join-back shape stays the same.
 
 Reference parity: no tokenizer surface in the reference (bank ETL,
-main.py); extends the text stack (functions/text.py, operators/vocab.py,
-operators/lm.py).
+main.py); extends the text stack (functions/text.py).
 """
 
 from __future__ import annotations
