@@ -26,12 +26,10 @@ Layout
                  IVF,SQ8), int8 embedding quantization, multimodal
                  column plumbing, salted aggregation, data-quality
                  gates, supervised quality classifier, DSIR importance
-                 weighting, deterministic sampling / splits /
-                 per-stratum caps, exact-substring and line dedup, BPE
-                 tokenizer training, sequence chunking+packing, BM25
-                 ranking, PII redaction, benchmark decontamination +
-                 leakage-guarded splits, sessionization, time-series
-                 resampling with gap filling
+                 weighting, deterministic sampling / per-stratum caps,
+                 sequence chunking+packing, BM25 ranking, PII
+                 redaction, sessionization, time-series resampling
+                 with gap filling
 - ``sinks``      parquet warehouse: partitioned append, atomic versioned
                  overwrite-swap (SCD2 rewrite), dynamic partition
                  overwrite, bucketed tables; sharded JSONL corpus export

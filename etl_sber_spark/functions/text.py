@@ -86,8 +86,8 @@ def quality_score(col: Column | str) -> Column:
 
     Components (each a cheap column expression):
     - length_ok: min(n_chars/100, 1) — rewards reaching ~100 chars; NO
-      upper-length penalty (mega-documents are the repetition/dedup
-      gates' job, functions/repetition.py + operators/dedup.py)
+      upper-length penalty (mega-documents are the dedup gates' job,
+      operators/dedup.py)
     - alpha_ratio: share of letters
     - punct penalty: share of [.,;:!?"] capped at 0.2, scaled
     - mean token length in [3, 12] rewarded

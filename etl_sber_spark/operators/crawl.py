@@ -38,14 +38,6 @@ R_NOT_ALLOWED = "domain_not_allowed"
 R_NOINDEX = "noindex"
 R_EMPTY = "empty_text"
 R_URL_DUP = "url_dup"
-CRAWL_DROP_REASONS = (
-    R_BAD_URL,
-    R_BLOCKED,
-    R_NOT_ALLOWED,
-    R_NOINDEX,
-    R_EMPTY,
-    R_URL_DUP,
-)
 
 
 def _domain_flag(

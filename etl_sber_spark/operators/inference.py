@@ -1,11 +1,11 @@
 """Batched model inference over a corpus: the embedding-generation stage.
 
 Every similarity/semantic operator in this repo CONSUMES an embedding
-column (semdedup, cosine top-k, IVF, semantic decontamination); this
-module is the stage that PRODUCES it — running a text encoder over the
-corpus as Arrow-batched ``mapInPandas``, the one place model inference
-can live in a Spark pipeline (a model call is opaque Python/C++; there
-is no Catalyst expression for it).
+column (semdedup, cosine top-k, IVF); this module is the stage that
+PRODUCES it — running a text encoder over the corpus as Arrow-batched
+``mapInPandas``, the one place model inference can live in a Spark
+pipeline (a model call is opaque Python/C++; there is no Catalyst
+expression for it).
 
 The encoder itself is pluggable and STUBBED by default: no ML runtime
 exists in this container, so the default encoder is a deterministic

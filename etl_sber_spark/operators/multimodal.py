@@ -29,24 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Typed metadata carried alongside every payload.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("source", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 #: Output schema of the decode/feature step.
 FEATURES_SCHEMA = T.StructType(
     [

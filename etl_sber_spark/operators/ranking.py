@@ -1,10 +1,9 @@
 """TF-IDF / BM25 relevance scoring over a document corpus.
 
 Keyword retrieval is the workhorse of corpus curation (finding
-domain-relevant documents, building eval slices, decontamination
-sweeps against benchmark queries). This module implements the standard
-Okapi BM25 with corpus statistics computed *inside* the same job —
-no driver-side scalars, no collect.
+domain-relevant documents, building eval slices). This module
+implements the standard Okapi BM25 with corpus statistics computed
+*inside* the same job — no driver-side scalars, no collect.
 
 Scoring uses the conventional parameters k1=1.2, b=0.75 and the
 "plus-one" idf ``ln(1 + (N - df + 0.5)/(df + 0.5))`` (always positive,

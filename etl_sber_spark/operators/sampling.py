@@ -16,15 +16,15 @@ output depends on partitioning — unusable for differential testing and
 hostile to reproducibility at scale. These operators are graded against
 DuckDB running the *identical* hash arithmetic (q_stratified_sample).
 
-100 TB design: all three operators are one codegen'd filter/projection
-over the scan — zero shuffles, zero driver round-trips. The per-stratum
+100 TB design: stratified_sample and downsample_to are one codegen'd
+filter over the scan — zero shuffles, zero driver round-trips. The per-stratum
 rate map is a literal CASE expression (strata counts are small:
 languages, sources, quality buckets).
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,31 +65,6 @@ def stratified_sample(
             .otherwise(expr)
         )
     return df.filter(sample_bucket(F.col(id_col), seed) < expr)
-
-
-def hash_split(
-    df: DataFrame,
-    weights: Sequence[float],
-    id_col: str = "doc_id",
-    seed: int = 0,
-    split_col: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test split: adds ``split_col`` with the
-    0-based split index chosen by hash range. ``weights`` need not sum
-    to 1 (normalized). Every row gets exactly one split, stable across
-    reruns and corpus growth."""
-    total = float(sum(weights))
-    bucket = sample_bucket(F.col(id_col), seed)
-    expr: Column = F.lit(len(weights) - 1)
-    acc = 0.0
-    # descending CASE chain: bucket < cum_i → split i
-    bounds = []
-    for i, w in enumerate(weights[:-1]):
-        acc += w / total
-        bounds.append((i, int(round(acc * RESOLUTION))))
-    for i, b in reversed(bounds):
-        expr = F.when(bucket < b, F.lit(i)).otherwise(expr)
-    return df.withColumn(split_col, expr)
 
 
 def cap_per_stratum(

@@ -2,27 +2,20 @@
 
 Groups a user's events into sessions separated by inactivity gaps —
 the standard unit of web/product analytics and the canonical
-"stateful" operator every engine is asked for. Two independent
-formulations, cross-checked in tests/test_sessionize.py:
-
-- :func:`sessionize` — window algebra: lag → gap flag → running sum.
-  Emits one row PER EVENT with its session id (what downstream
-  per-event feature pipelines join on). One shuffle (the per-user
-  window sort).
-- :func:`session_stats` — per-session aggregate rows via Spark's
-  native ``F.session_window`` (merging-interval aggregation). In
-  BATCH it computes the same sessions as the window formulation;
-  the same expression also runs on a streaming DataFrame with
-  watermark-evicted state — one definition, both execution modes.
+"stateful" operator every engine is asked for. :func:`sessionize` is
+window algebra: lag → gap flag → running sum. It emits one row PER
+EVENT with its session id (what downstream per-event feature pipelines
+join on), with one shuffle (the per-user window sort).
+tests/test_sessionize.py checks it against hand fixtures and DuckDB.
 
 Session identity: ``session_id = user × 2^32 + seq`` (seq is the
 0-based per-user session ordinal) — deterministic, collision-free for
 user ids < 2^31 (the fixture range), and cheap (no string concat in
 the hot path).
 
-Scale: both shapes shuffle once on the user key; per-user data is
-bounded (events/user, not corpus-sized), so the window sort never
-spills pathologically; AQE skew handling covers hot users. No UDFs.
+Scale: one shuffle on the user key; per-user data is bounded
+(events/user, not corpus-sized), so the window sort never spills
+pathologically; AQE skew handling covers hot users. No UDFs.
 
 Reference parity: the reference has no sessionization (nightly bank
 batch); extension surface.
@@ -49,8 +42,7 @@ def sessionize(
     + ``session_id``. An event starts a new session iff it is the
     user's first or follows the previous event by MORE than
     ``gap_minutes`` (a gap of exactly ``gap_minutes`` continues the
-    session — the closed-interval convention ``session_window`` uses,
-    so the two formulations agree on boundary events).
+    session — the closed-interval convention ``session_window`` uses).
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
     gap_us = F.lit(gap_minutes * 60 * 1_000_000)
@@ -69,40 +61,3 @@ def sessionize(
         F.col(user_col).cast("long") * F.lit(2**32) + F.col("session_seq"),
     )
 
-
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = DEFAULT_GAP_MIN,
-) -> DataFrame:
-    """One row per session via native ``session_window`` merging.
-
-    Output: ``user_col``, ``session_start``, ``session_end`` (last
-    event time; session_window's ``end`` is last-event + gap, so the
-    aggregate carries max(ts) explicitly), ``n_events``,
-    ``duration_us``. Works unchanged on a streaming DataFrame
-    (add a watermark first).
-    """
-    gap = f"{gap_minutes} minutes"
-    return (
-        df.groupBy(
-            F.col(user_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(
-            user_col,
-            "session_start",
-            "session_end",
-            "n_events",
-            (
-                F.unix_micros(F.col("session_end"))
-                - F.unix_micros(F.col("session_start"))
-            ).alias("duration_us"),
-        )
-    )

@@ -1,7 +1,8 @@
-"""Explicit StructTypes for every dataset the pipeline touches.
+"""Explicit StructTypes for the pipeline's input, fact and dimension data.
 
 The reference declares all schemas as Oracle DDL (main.py:22-27, 43-51,
-218-221, 232-235, 321-330, 341-350, 430-438); we declare them once here
+218-221, 232-235, 321-330, 341-350); we declare them once here
+(the fraud mart's columns are the projection in plans/fraud.py)
 and never rely on reader inference (a dirty day-2 file would infer
 garbage — SURVEY.md §1.4). Type mapping per SURVEY.md §1.2.
 """
@@ -96,17 +97,5 @@ CARDS = T.StructType(
     [
         T.StructField("card_num", T.StringType()),
         T.StructField("account", T.StringType()),
-    ]
-)
-
-#: Fraud report mart (main.py:430-438).
-REP_FRAUD = T.StructType(
-    [
-        T.StructField("event_dt", T.TimestampType()),
-        T.StructField("passport", T.StringType()),
-        T.StructField("fio", T.StringType()),
-        T.StructField("phone", T.StringType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("report_dt", T.DateType()),
     ]
 )

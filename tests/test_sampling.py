@@ -1,6 +1,6 @@
 """Semantic pins for deterministic sampling (operators/sampling.py):
-rate accuracy, determinism, hash-stability under corpus growth, and
-split partitioning laws. q_stratified_sample differentially proves the
+rate accuracy, determinism, hash-stability under corpus growth and
+rebalancing toward target shares. q_stratified_sample differentially proves the
 hash arithmetic against DuckDB.
 """
 
@@ -9,11 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_sber_spark.operators.sampling import (
-    downsample_to,
-    hash_split,
-    stratified_sample,
-)
+from etl_sber_spark.operators.sampling import downsample_to, stratified_sample
 
 
 @pytest.fixture(scope="module")
@@ -53,31 +49,6 @@ def test_seed_changes_selection(corpus):
     b = {r.doc_id for r in stratified_sample(corpus, "lang", {"en": 0.5}, seed=1).collect()}
     assert a != b
     assert abs(len(a) - len(b)) < 5 * (2000 * 0.25) ** 0.5
-
-
-def test_hash_split_partitions(corpus):
-    out = hash_split(corpus, [0.8, 0.1, 0.1])
-    counts = {r.split: r.n for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert sum(counts.values()) == 4000  # exactly one split per row
-    assert set(counts) == {0, 1, 2}
-    assert abs(counts[0] - 3200) < 5 * (4000 * 0.16) ** 0.5
-    # stable: same row → same split on rerun
-    a = {r.doc_id: r.split for r in out.collect()}
-    b = {r.doc_id: r.split for r in hash_split(corpus, [0.8, 0.1, 0.1]).collect()}
-    assert a == b
-
-
-def test_split_disjoint_from_sample_seed(corpus):
-    """Split (seed 0) and a sampling decision at seed 1 are independent:
-    the sampled-in share inside each split matches the global rate."""
-    split = hash_split(corpus, [0.5, 0.5], seed=0)
-    sampled = stratified_sample(split, "lang", {"en": 0.5, "de": 0.5}, seed=1)
-    per = {
-        r.split: r.n
-        for r in sampled.groupBy("split").agg(F.count("*").alias("n")).collect()
-    }
-    for s in (0, 1):
-        assert abs(per[s] - 1000) < 5 * (2000 * 0.25) ** 0.5
 
 
 def test_downsample_to_shares(corpus):

@@ -1,14 +1,11 @@
-"""Sessionization (operators/sessionize.py): hand-computed fixtures,
-cross-check of the two formulations (window algebra vs native
-session_window), and a DuckDB differential on the synthetic events."""
+"""Sessionization (operators/sessionize.py): hand-computed fixtures and
+a DuckDB differential on the synthetic events."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from etl_sber_spark.operators.sessionize import session_stats, sessionize
+from etl_sber_spark.operators.sessionize import sessionize
 
 from .conftest import SF_SMALL
 
@@ -42,54 +39,10 @@ def test_sessionize_hand_fixture(spark):
 
 def test_exact_gap_continues_session(spark):
     """A gap of exactly gap_minutes continues the session (the
-    session_window closed-interval convention both formulations share)."""
+    closed-interval convention of Spark's session_window)."""
     df = _events(spark, [(1, 0), (1, 30)])
     rows = sessionize(df, gap_minutes=30).collect()
     assert {r.session_seq for r in rows} == {0}
-    assert session_stats(df, gap_minutes=30).count() == 1
-
-
-def test_formulations_agree_on_fixture(spark):
-    df = _events(spark, [(1, 0), (1, 10), (1, 50), (1, 70), (2, 5), (2, 59)])
-    a = (
-        sessionize(df, gap_minutes=20)
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
-    b = session_stats(df, gap_minutes=20)
-    assert sorted(map(tuple, a.collect())) == sorted(
-        map(tuple, b.select(a.columns).collect())
-    )
-
-
-def test_formulations_agree_on_real_events(spark):
-    """The two implementations are independent formulations of the same
-    semantics; on the full synthetic events table they must produce
-    identical per-session aggregate sets."""
-    from etl_sber_spark.sources.tables import load_table
-
-    e = load_table(spark, SF_SMALL, "events").select("event_id", "user_id", "ts")
-    a = (
-        sessionize(e, gap_minutes=30)
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
-    b = session_stats(e, gap_minutes=30)
-    assert a.count() == b.count()
-    diff = (
-        a.select("user_id", "session_start", "session_end", "n_events")
-        .exceptAll(b.select("user_id", "session_start", "session_end", "n_events"))
-    )
-    assert diff.isEmpty()
 
 
 def test_sessionize_vs_duckdb_oracle(spark, tmp_path):

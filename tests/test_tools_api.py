@@ -10,6 +10,10 @@ checks, against the imported package itself:
 - every ``alias.attr`` on an imported package module exists;
 - every keyword passed to an imported package callable is a parameter
   of its ``inspect.signature`` (unless it takes ``**kwargs``).
+
+The same ``ast`` walk, followed from every entry point (the CLIs, the
+query registries, ``bench.py``, the driver entry, perfbench and the
+tools), must reach every package module but two named exceptions.
 """
 
 from __future__ import annotations
@@ -23,7 +27,8 @@ from pathlib import Path
 import pytest
 
 PKG = "etl_sber_spark"
-TOOLS = sorted((Path(__file__).resolve().parent.parent / "tools").glob("*.py"))
+ROOT = Path(__file__).resolve().parent.parent
+TOOLS = sorted((ROOT / "tools").glob("*.py"))
 
 
 def _package_names(tree: ast.AST, errors: list[str]) -> dict[str, object]:
@@ -144,3 +149,92 @@ def test_checker_sees_keywords_and_flags_drift(tmp_path):
     assert len(errors) == 3, errors
     for word in ("no_such_name", "no_such_attr", "no_such_keyword"):
         assert any(word in e for e in errors), (word, errors)
+
+
+# --- every package module is reached from an entry point -----------------
+
+#: Entry points whose imports (module-level and function-local) define
+#: what the package must contain.
+ENTRY_FILES = sorted(
+    [
+        ROOT / PKG / f"{m}.py"
+        for m in ("__main__", "corpus_cli", "ann_cli", "crawl_cli")
+    ]
+    + [ROOT / PKG / "plans" / f"{m}.py" for m in ("queries", "llm_queries")]
+    + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    + [
+        p
+        for p in (ROOT / "perfbench").glob("*.py")
+        if not p.name.startswith("test_")
+    ]
+    + list(TOOLS)
+)
+
+#: Package modules no entry point imports, each kept for a stated reason.
+UNREACHED_ON_PURPOSE = {
+    f"{PKG}.operators.quality": "the pipeline tests check the fact with it",
+    f"{PKG}.sources.jdbc": "the documented Oracle read path (see __main__)",
+}
+
+
+def _package_modules() -> dict[str, Path]:
+    """Dotted module name → file, for every module under the package."""
+    mods = {}
+    for path in (ROOT / PKG).rglob("*.py"):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mods[".".join(parts)] = path
+    return mods
+
+
+def _imported_modules(path: Path, name: str | None, mods: dict) -> set[str]:
+    """Package modules the import statements in one file load: each
+    imported module, its parent packages, and any ``from``-imported name
+    that is itself a submodule. ``name`` is the file's own dotted name
+    (None outside the package); it resolves relative imports."""
+    is_pkg = path.name == "__init__.py"
+    out: set[str] = set()
+
+    def add(dotted: str) -> None:
+        parts = dotted.split(".")
+        for i in range(1, len(parts) + 1):
+            if ".".join(parts[:i]) in mods:
+                out.add(".".join(parts[:i]))
+
+    if name is not None:  # running a package module loads its parents
+        add(name)
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                add(a.name)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                if name is None:  # a script's own relative import
+                    continue
+                anchor = name.split(".")
+                anchor = anchor[: len(anchor) - node.level + is_pkg]
+                base = ".".join(anchor + ([base] if base else []))
+            add(base)
+            for a in node.names:
+                add(f"{base}.{a.name}")
+    return out
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    """Walk the imports from the CLIs, the query registries, bench.py,
+    the driver entry, perfbench and the tools: every package module is
+    reached, apart from the named exceptions. Code that only its own
+    tests import does not stay in the package."""
+    mods = _package_modules()
+    assert set(UNREACHED_ON_PURPOSE) <= set(mods)
+    by_path = {p: n for n, p in mods.items()}
+    todo = [(p, by_path.get(p)) for p in ENTRY_FILES]
+    reached: set[str] = set()
+    while todo:
+        path, name = todo.pop()
+        for m in _imported_modules(path, name, mods) - reached:
+            reached.add(m)
+            todo.append((mods[m], m))
+    assert sorted(set(mods) - reached) == sorted(UNREACHED_ON_PURPOSE)

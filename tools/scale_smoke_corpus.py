@@ -1,10 +1,9 @@
 #!/usr/bin/env python3
 """Corpus-stack scale smoke (VERDICT r4 #4): replicate the sf0.1
 documents/embeddings tables N× with perturbation, run the composed
-curation pipeline, exact-substring dedup, and SemDeDup end-to-end, and
-report wall time + REAL shuffle sizes (from Spark's REST status API) so
-the Σ|bucket|² / "one shuffle per stage" claims in SCALE.md are
-measurements, not arguments.
+curation pipeline and SemDeDup end-to-end, and report wall time + REAL
+shuffle sizes (from Spark's REST status API) so the Σ|bucket|² / "one
+shuffle per stage" claims in SCALE.md are measurements, not arguments.
 
 Usage:  python tools/scale_smoke_corpus.py [factor] [sf_dir]
         (defaults: 10 /root/testdata/sf0.1)
@@ -96,7 +95,6 @@ def main() -> None:
 
     from etl_sber_spark.operators.curate import curate_corpus
     from etl_sber_spark.operators.semdedup import semdedup
-    from etl_sber_spark.operators.substr_dedup import remove_duplicate_spans
     from etl_sber_spark.session import get_spark
 
     spark = get_spark("scale-smoke")
@@ -167,16 +165,6 @@ def main() -> None:
         lambda: curate_corpus(big, transitive=True)
         .filter(F.col("drop_reason").isNull())
         .count(),
-    )
-    phase(
-        "substr_dedup",
-        lambda: remove_duplicate_spans(big)
-        .agg(
-            F.sum("n_tokens_removed").alias("tok_removed"),
-            F.count(F.lit(1)).alias("rows"),
-        )
-        .collect()[0]
-        .asDict(),
     )
     phase(
         "semdedup",
