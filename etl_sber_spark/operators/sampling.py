@@ -17,9 +17,9 @@ hostile to reproducibility at scale. These operators are graded against
 DuckDB running the *identical* hash arithmetic (q_stratified_sample).
 
 100 TB design: stratified_sample and downsample_to are one codegen'd
-filter over the scan — zero shuffles, zero driver round-trips. The per-stratum
-rate map is a literal CASE expression (strata counts are small:
-languages, sources, quality buckets).
+filter over the scan — zero shuffles, zero driver round-trips. The
+per-stratum rate map is a literal CASE expression (strata counts are
+small: languages, sources, quality buckets).
 """
 
 from __future__ import annotations
