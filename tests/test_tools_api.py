@@ -155,7 +155,7 @@ def test_checker_sees_keywords_and_flags_drift(tmp_path):
 
 #: Entry points whose imports (module-level and function-local) define
 #: what the package must contain.
-ENTRY_FILES = sorted(
+ENTRY_FILES = (
     [
         ROOT / PKG / f"{m}.py"
         for m in ("__main__", "corpus_cli", "ann_cli", "crawl_cli")
@@ -228,7 +228,6 @@ def test_every_package_module_is_reached_from_an_entry_point():
     reached, apart from the named exceptions. Code that only its own
     tests import does not stay in the package."""
     mods = _package_modules()
-    assert set(UNREACHED_ON_PURPOSE) <= set(mods)
     by_path = {p: n for n, p in mods.items()}
     todo = [(p, by_path.get(p)) for p in ENTRY_FILES]
     reached: set[str] = set()
